@@ -14,8 +14,11 @@ import scala.collection.mutable
   */
 object JobProfile {
   private case class JobRec(id: Int, desc: String, t0: Long,
-    var t1: Long = 0L, var stages: Int = 0, var tasks: Int = 0,
-    var shufWrite: Long = 0L, var shufRead: Long = 0L)
+    var t1: Long = 0L)
+  /** One completed attempt of a stage; a retried stage keeps only its
+    * latest attempt, so its tasks and bytes count once. */
+  private case class StageRec(attempt: Int, tasks: Int, shufWrite: Long,
+    shufRead: Long)
 
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -40,6 +43,7 @@ object JobProfile {
     }
     val jobs = mutable.LinkedHashMap[Int, JobRec]()
     val stageToJob = mutable.HashMap[Int, Int]()
+    val stages = mutable.HashMap[Int, StageRec]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
         val desc = Option(e.properties)
@@ -53,18 +57,15 @@ object JobProfile {
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         synchronized {
-          stageToJob.get(e.stageInfo.stageId).flatMap(jobs.get).foreach { j =>
-            j.stages += 1; j.tasks += e.stageInfo.numTasks
-            // per-stage exchange volume (round 19, the q22 band-payload
-            // question): accumulated task metrics are final by stage
-            // completion — write bytes attribute the map side, read
-            // bytes the reduce side, of each shuffle to its job
-            val m = e.stageInfo.taskMetrics
-            if (m != null) {
-              j.shufWrite += m.shuffleWriteMetrics.bytesWritten
-              j.shufRead += m.shuffleReadMetrics.totalBytesRead
-            }
-          }
+          // per-stage exchange volume: accumulated task metrics are
+          // final by stage completion — write bytes attribute the map
+          // side, read bytes the reduce side, of each shuffle to its job
+          val i = e.stageInfo
+          val m = i.taskMetrics
+          if (stages.get(i.stageId).forall(_.attempt <= i.attemptNumber()))
+            stages(i.stageId) = StageRec(i.attemptNumber(), i.numTasks,
+              if (m == null) 0L else m.shuffleWriteMetrics.bytesWritten,
+              if (m == null) 0L else m.shuffleReadMetrics.totalBytesRead)
         }
     }
     spark.sparkContext.addSparkListener(listener)
@@ -76,15 +77,20 @@ object JobProfile {
     println(f"[profile] measured: $rows rows, $wall%.3f s, ${jobs.size} jobs")
     var prevEnd = -1L
     var jobSum = 0.0
+    val byJob = stages.toSeq
+      .flatMap { case (sid, r) => stageToJob.get(sid).map(_ -> r) }
+      .groupMap(_._1)(_._2)
     jobs.values.foreach { j =>
+      val ss = byJob.getOrElse(j.id, Nil)
       val dur = (j.t1 - j.t0) / 1e3
       jobSum += dur
       val gap = if (prevEnd > 0) (j.t0 - prevEnd) / 1e3 else 0.0
       prevEnd = j.t1
       println(f"[profile] job ${j.id}%3d ${dur}%7.3f s gap=${gap}%6.3f s " +
-        f"stages=${j.stages}%2d tasks=${j.tasks}%4d " +
-        f"shufW=${j.shufWrite / 1024.0 / 1024.0}%8.2fMB " +
-        f"shufR=${j.shufRead / 1024.0 / 1024.0}%8.2fMB ${j.desc.take(90)}")
+        f"stages=${ss.size}%2d tasks=${ss.map(_.tasks).sum}%4d " +
+        f"shufW=${ss.map(_.shufWrite).sum / 1024.0 / 1024.0}%8.2fMB " +
+        f"shufR=${ss.map(_.shufRead).sum / 1024.0 / 1024.0}%8.2fMB " +
+        j.desc.take(90))
     }
     println(f"[profile] job-sum=${jobSum}%.3f s  driver-gaps=${wall - jobSum}%.3f s")
     spark.stop()

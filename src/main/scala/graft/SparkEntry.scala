@@ -231,6 +231,27 @@ object SparkEntry {
              AND alpha * 5 >= word_count * 4
              AND stop_hits >= 2"""
 
+  /** Run `tasks` on one driver thread each and wait for all of them.
+    * Every throwable a thread dies of, fatal ones included (an
+    * OutOfMemoryError kills only its own thread), fails the call: the
+    * first is rethrown from the calling thread as the cause of a
+    * RuntimeException carrying `failure`, any others are suppressed. */
+  private[graft] def runConcurrently(failure: String,
+      tasks: Seq[() => Unit]): Unit = {
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = tasks.map { task =>
+      val th = new Thread(() => task())
+      th.setUncaughtExceptionHandler((_, e) => errs.add(e))
+      th.start(); th
+    }
+    threads.foreach(_.join())
+    if (!errs.isEmpty) {
+      val ex = new RuntimeException(failure, errs.poll())
+      while (!errs.isEmpty) ex.addSuppressed(errs.poll())
+      throw ex
+    }
+  }
+
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
       .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -592,27 +613,7 @@ object SparkEntry {
             col("c_name")),
           customerTbl, "custkey", buckets = 16,
           path = Some(s"$tmp/customer")))
-      val errs =
-        new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val threads = writes.map { w =>
-        // NonFatal only (ADVICE r18): an OutOfMemoryError must kill
-        // the JVM, not be queued and re-wrapped
-        val th = new Thread(() =>
-          try w() catch {
-            case scala.util.control.NonFatal(e) => errs.add(e)
-          })
-        th.start(); th
-      }
-      threads.foreach(_.join())
-      if (!errs.isEmpty) {
-        // re-throw from the DRIVER thread with the worker failure as
-        // cause (keeps this stack context); any second failure is
-        // recorded as suppressed instead of silently dropped
-        val ex = new RuntimeException(
-          "q81_colocated_join: bucketed write failed", errs.poll())
-        while (!errs.isEmpty) ex.addSuppressed(errs.poll())
-        throw ex
-      }
+      runConcurrently("q81_colocated_join: bucketed write failed", writes)
       // broadcast disabled in a CHILD session: newSession() shares the
       // SparkContext and catalog (the bucketed tables are visible) but
       // carries its OWN conf, so concurrent queries on `s` keep their

@@ -18,8 +18,26 @@ import graft.sinks.{CollectionRouter, Merge}
   * Each stage takes and returns DataFrames so the whole flow is testable
   * in-memory; Verify/production wire the same functions to parquet
   * tables.
+  *
+  * Invariant of vectorize, classify, keywords and sync: every new
+  * state's doc is in the stage's own latest-state selection, whose row
+  * is the doc's max-`operation_order` ledger row. So a new state's
+  * order is the selected row's order + 1, read off the selection
+  * instead of a second aggregate over the whole ledger
+  * (`Ledger.withNextOperationOrder` gives the same values). Each output
+  * frame runs the stage's expensive work (chunking, embedding, keyword
+  * extraction) at most once.
   */
 object Pipeline {
+
+  /** (document_id, title, operation_order) states that follow each
+    * row's selected latest state; `selected` carries the selection's
+    * `document_id` and `operation_order`, one row per document. */
+  private def nextStates(selected: DataFrame,
+      title: org.apache.spark.sql.Column): DataFrame =
+    selected.select(col("document_id"), title.as("title"),
+      (coalesce(col("operation_order"), lit(0L)) + 1L)
+        .as("operation_order"))
 
   /** Stage "generate_to_vectorize + document_vectorizer" (SURVEY §3.1,
     * reference DocumentVectorizer): select scraped docs (latest state ==
@@ -27,9 +45,11 @@ object Pipeline {
     * content, chunk + embed each document, emit (slices, newStates).
     *
     * Scale: selection is one window over the ledger; admission bounds the
-    * working set BEFORE the expensive chunk+embed; chunk+embed is
-    * row-local (UDF + posexplode) — executors stream documents through
-    * with no shuffle after the initial repartition.
+    * working set BEFORE the expensive chunk+embed. Admission's ordered
+    * window is global, so chunk+embed (UDF + posexplode, row-local) run
+    * in the single partition that window leaves, with no further
+    * shuffle; `pickQtyMax` bounds that partition. A doc whose content
+    * yields no slice gets no new state.
     */
   def vectorize(documents: DataFrame, ledger: DataFrame,
       pickQtyMax: Int = 1000, byteCap: Long = 10000000000L,
@@ -48,10 +68,11 @@ object Pipeline {
       candidates,
       Seq(col("operation_order").desc, col("document_id")),
       "content_bytes", byteCap, limitRows = pickQtyMax)
-    val slices = admitted
-      .select(col("id").as("document_id"),
+    val chunks = admitted
+      .select(col("id").as("document_id"), col("operation_order"),
         posexplode(Chunker.slices(col("full_content"), maxWordsPerSlice))
           .as(Seq("order_sequence", "body")))
+    val slices = chunks.drop("operation_order")
       .withColumn("embedding_vec",
         ModelRegistry.embedding(col("body"), model))
       .withColumn("embedding",
@@ -59,10 +80,9 @@ object Pipeline {
       .withColumn("id",
         concat(col("document_id"), lit("#"), col("order_sequence")))
       .withColumn("embedding_model_name", lit(model))
-    val newStates = Ledger.withNextOperationOrder(
-      slices.select("document_id").distinct()
-        .withColumn("title", lit(Step.DocumentVectorized)),
-      ledger)
+    val newStates = nextStates(
+      chunks.select("document_id", "operation_order").distinct(),
+      lit(Step.DocumentVectorized))
     (slices, newStates)
   }
 
@@ -75,7 +95,7 @@ object Pipeline {
       : (DataFrame, DataFrame) = {
     val vectorized = Ledger
       .selectByLastStep(ledger, Seq(Step.DocumentVectorized))
-      .select(col("document_id"))
+      .select(col("document_id"), col("operation_order"))
     val inScope = slices.join(vectorized, Seq("document_id"), "left_semi")
       .withColumn("embedding_vec",
         VectorCodec.bytesToFloatVector(col("embedding")))
@@ -92,11 +112,10 @@ object Pipeline {
     val sliceSdgs = n.select(col("id").as("slice_id"), col("document_id"),
       col("sdg_number"), col("n_score"), col("n_model_id"))
     val docFlag = SdgClassifier.documentIsSdg(bi)
-    val newStates = Ledger.withNextOperationOrder(
-      docFlag.select(col("document_id"),
-        when(col("document_is_sdg"), lit(Step.DocumentClassifiedSdg))
-          .otherwise(lit(Step.DocumentClassifiedNonSdg)).as("title")),
-      ledger)
+    val newStates = nextStates(
+      docFlag.join(vectorized, Seq("document_id")),
+      when(col("document_is_sdg"), lit(Step.DocumentClassifiedSdg))
+        .otherwise(lit(Step.DocumentClassifiedNonSdg)))
     (sliceSdgs, newStates)
   }
 
@@ -106,32 +125,40 @@ object Pipeline {
     * keyword dimension insert-if-absent (J9 semantics —
     * Merge.insertIfAbsentDf), link doc->keyword, advance to
     * document_with_keywords. Returns (keywordDim, docKeywordLinks,
-    * newStates). */
+    * newStates).
+    *
+    * Every extracted keyword lands in the dim (existing id, else
+    * `kw-<keyword>`), so links join `existingKeywords` directly and each
+    * output runs the extractor once; the docs with links are the docs
+    * with extracted keywords. */
   def keywords(documents: DataFrame, ledger: DataFrame,
       existingKeywords: DataFrame, embedDim: Int = 64)
       : (DataFrame, DataFrame, DataFrame) = {
     val eligible = Ledger
       .selectByLastStep(ledger, Seq(Step.DocumentClassifiedSdg))
-      .select(col("document_id"))
+      .select(col("document_id"), col("operation_order"))
     val extracted = documents
       .join(eligible, documents("id") === eligible("document_id"))
-      .select(col("id").as("document_id"),
+      .select(col("id").as("document_id"), col("operation_order"),
         explode(Keywords.extract(col("full_content"), embedDim, topN = 5))
           .as("kw"))
-      .select(col("document_id"), col("kw.keyword").as("keyword"))
+      .select(col("document_id"), col("operation_order"),
+        col("kw.keyword").as("keyword"))
     // J9: insert-if-absent into the keyword dim, then surrogate join
     val newKeywords = Merge.insertIfAbsentDf(existingKeywords,
       extracted.select("keyword").distinct()
         .withColumn("id", concat(lit("kw-"), col("keyword"))),
       "keyword", "keyword")
     val dim = existingKeywords.unionByName(newKeywords)
-    val links = extracted.join(dim, "keyword")
-      .select(col("document_id"), col("id").as("keyword_id"))
+    val links = extracted
+      .join(existingKeywords.select("keyword", "id"), Seq("keyword"), "left")
+      .select(col("document_id"),
+        coalesce(col("id"), concat(lit("kw-"), col("keyword")))
+          .as("keyword_id"))
       .distinct()
-    val newStates = Ledger.withNextOperationOrder(
-      links.select("document_id").distinct()
-        .withColumn("title", lit(Step.DocumentWithKeywords)),
-      ledger)
+    val newStates = nextStates(
+      extracted.select("document_id", "operation_order").distinct(),
+      lit(Step.DocumentWithKeywords))
     (dim, links, newStates)
   }
 
@@ -146,20 +173,22 @@ object Pipeline {
     val eligible = Ledger.selectByLastStep(ledger,
         Seq(Step.DocumentWithKeywords, Step.DocumentClassifiedNonSdg,
           Step.DocumentIsInvalid))
-      .select(col("document_id"))
+      .select(col("document_id"), col("operation_order"))
     val top2 = SdgClassifier.topKSdgsPerDocument(sliceSdgs, 2)
+    // one selection row per doc: the inner join keeps the semi join's
+    // rows and carries the selected order to the states
     val enriched = slices
-      .join(eligible, Seq("document_id"), "left_semi")
+      .join(eligible, Seq("document_id"))
       .join(broadcast(documents.select(col("id").as("document_id"),
         col("url"), col("title"), col("lang"))), Seq("document_id"))
       .join(top2, Seq("document_id"), "left")
     val (routable, errors) = CollectionRouter.route(
       enriched, "lang", "embedding_model_name")
-    val newStates = Ledger.withNextOperationOrder(
-      routable.select("document_id").distinct()
-        .withColumn("title", lit(Step.DocumentInQdrant)),
-      ledger)
-    (routable, errors, newStates)
+    val newStates = nextStates(
+      routable.select("document_id", "operation_order").distinct(),
+      lit(Step.DocumentInQdrant))
+    (routable.drop("operation_order"), errors.drop("operation_order"),
+      newStates)
   }
 
   /** Model-selection-as-data (reference J4/J5/M7:

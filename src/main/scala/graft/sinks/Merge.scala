@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Warehouse writers with the reference's idempotency semantics
@@ -42,7 +42,8 @@ object Merge {
 
   /** S16 semantics, pure form: rows from `incoming` whose `key` is not
     * already in `existing`, de-duplicated within the batch (first by
-    * `orderCol` wins, deterministic). */
+    * `orderCol` wins, deterministic). The left-anti join only tests
+    * existence, so `existing` needs no de-duplication. */
   def insertIfAbsentDf(existing: DataFrame, incoming: DataFrame,
       key: String, orderCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -50,7 +51,7 @@ object Merge {
     incoming
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn")
-      .join(existing.select(key).distinct(), Seq(key), "left_anti")
+      .join(existing.select(key), Seq(key), "left_anti")
   }
 
   /** S18 semantics, pure form: `table` with every row whose `key` appears
@@ -63,16 +64,29 @@ object Merge {
   }
 
   /** Disk form of insert-if-absent against a parquet table dir. Creates
-    * the table if missing. Returns the number of appended rows. */
+    * the table if missing. Returns the number of appended rows.
+    *
+    * One pass: the rows to append are computed by exactly one Spark
+    * execution, the write, and the count comes from a metric observed
+    * on that write. Only successful task attempts contribute to it, so
+    * the count equals the rows that landed, also under task retries.
+    * The metric is read only after the write returns: a failed write
+    * throws here instead of leaving `obs.get` waiting.
+    *
+    * An empty append still runs the write, so it creates a missing
+    * table with the incoming schema and can add one zero-row parquet
+    * file to an existing one; readers see no new rows. Probing for
+    * emptiness first would execute the plan a second time. */
   def insertIfAbsent(spark: SparkSession, tableDir: String,
       incoming: DataFrame, key: String, orderCol: String): Long = {
     val (fs, tablePath) = hfs(spark, tableDir)
     val toWrite = if (fs.exists(tablePath)) {
       insertIfAbsentDf(spark.read.parquet(tableDir), incoming, key, orderCol)
     } else incoming
-    val n = toWrite.count()
-    if (n > 0) toWrite.write.mode(SaveMode.Append).parquet(tableDir)
-    n
+    val obs = new Observation()
+    toWrite.observe(obs, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.Append).parquet(tableDir)
+    obs.get("rows").asInstanceOf[Long]
   }
 
   /** Disk form of delete-then-insert, keyed overwrite. The table is

@@ -14,6 +14,23 @@ class SparkEntrySpec extends SparkSuite {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("runConcurrently fails the call on a fatal error in a worker " +
+      "thread (q81's parallel bucketed writes)") {
+    val ran = new java.util.concurrent.atomic.AtomicInteger()
+    val ex = intercept[RuntimeException](SparkEntry.runConcurrently(
+      "writes failed", Seq(
+        () => { ran.incrementAndGet(); () },
+        () => throw new OutOfMemoryError("simulated"),
+        () => throw new IllegalStateException("second"))))
+    assert(ex.getMessage === "writes failed")
+    assert(ran.get === 1)
+    assert((ex.getCause +: ex.getSuppressed.toSeq).map(_.getMessage).toSet
+      === Set("simulated", "second"))
+    SparkEntry.runConcurrently("unused",
+      Seq(() => { ran.incrementAndGet(); () }))
+    assert(ran.get === 2)
+  }
+
   test("composite cluster queries (q83/q86/q119) run on the BOUNDED " +
       "pair generator and their oracle output is unchanged by the cap") {
     // The r9 review flagged these three as the only scale-weak spots:
