@@ -65,22 +65,11 @@ object SparkEntry {
     * (the guide's accidental-exchange class), while on the one-row-
     * group bench corpus it remains the fan-out it always was.
     *
-    * The probe reads the FileScan leaves' planned split counts from
-    * the physical plan (round 19, ADVICE r18): the previous
-    * `df.rdd.getNumPartitions` was job-free only for bare scans —
-    * under AQE, `.rdd` on a plan containing exchanges or subqueries
-    * eagerly materializes every upstream query stage. Reading the
-    * scan nodes' file-split math keeps the probe plan-time-only for
-    * ANY input frame (a non-file leaf, e.g. a local relation,
-    * conservatively counts as parallelism 1 and keeps the fan). */
+    * The probe is [[Dedup.scanParallelism]]: planned file splits, read
+    * from the physical plan without running a job. */
   private def fan(s: SparkSession, df: DataFrame): DataFrame = {
     val parts = s.sessionState.conf.numShufflePartitions
-    val scanParts = df.queryExecution.sparkPlan.collectLeaves().map {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.inputRDD.getNumPartitions
-      case _ => 1
-    }.sum
-    if (scanParts >= parts) df
+    if (Dedup.scanParallelism(df) >= parts) df
     else df.repartition(parts)
   }
 

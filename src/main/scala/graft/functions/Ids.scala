@@ -10,9 +10,6 @@ import org.apache.spark.sql.functions._
   * them. */
 object Ids {
 
-  /** Random v4 UUID (production paths). */
-  def uuidRandom(): Column = expr("uuid()")
-
   /** Deterministic UUID-format id derived from key columns: md5 the
     * concatenated keys and format as 8-4-4-4-12. Stable across engines
     * (md5 is identical in Spark and DuckDB) and across runs — the

@@ -41,14 +41,6 @@ object SqlRunner {
     spark.sql(sql, params)
   }
 
-  /** Execute a .sql file with params (reference BackFiller flow). */
-  def runSqlFile(spark: SparkSession, path: String,
-      params: Map[String, Any]): DataFrame =
-    runSql(spark,
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(path)), "UTF-8"),
-      params)
-
   /** One parsed statement-pair of the category backfill migration: a
     * category title and the corpus source_names it claims. */
   final case class CategoryBackfill(title: String, sources: Seq[String])

@@ -19,30 +19,29 @@ import graft.functions.TextMetrics
   */
 object Dedup {
 
-  /** Plan-time scan parallelism of a frame: the FileScan leaves'
-    * planned split counts (no job runs; non-file leaves — local
-    * relations, cached frames — conservatively count 1). The same
-    * probe as SparkEntry.fan(): used to decide whether a defensive
-    * re-spread repartition is a fan-out (one-row-group bench corpus)
-    * or a pure accidental full-stream shuffle (multi-split corpus at
-    * scale, guide §2.2/§2.4). */
-  private def scanParallelism(df: DataFrame): Int =
+  /** Plan-time scan parallelism of a frame: the sum of its
+    * `FileSourceScanExec` leaves' planned split counts, read from the
+    * physical plan (no job runs — `df.rdd.getNumPartitions` would
+    * materialize upstream AQE query stages). Every other leaf counts 1:
+    * a local relation, a cached frame (`InMemoryTableScanExec`) and a
+    * DSv2 scan (`BatchScanExec`) all look like one split, so callers
+    * gating a re-spread on this value always re-spread such inputs.
+    * Shared by `SparkEntry.fan` and [[respreadIfSmall]]. */
+  private[graft] def scanParallelism(df: DataFrame): Int =
     df.queryExecution.sparkPlan.collectLeaves().map {
       case f: org.apache.spark.sql.execution.FileSourceScanExec =>
         f.inputRDD.getNumPartitions
       case _ => 1
     }.sum
 
-  /** Re-spread a post-aggregation frame ahead of a fan-out explode —
-    * but ONLY when the corpus is small enough that AQE's coalescing
-    * would otherwise serialize the exploded stream through a handful
-    * of tasks (round 19, the fan() gate applied to the q21/q70
-    * emitters): on a multi-split corpus the aggregate's own shuffle
-    * already lands on the session's partition count, and the
-    * unconditional repartition was a full re-shuffle of the
-    * shingle-level aggregate for nothing. Probe is on the SOURCE
-    * frame (plan-time only) — probing the aggregate itself would
-    * materialize its query stages under AQE. */
+  /** Re-spread a post-aggregation frame ahead of a fan-out explode, but
+    * only when the source scan has fewer splits than the session's
+    * shuffle partitions: there AQE coalesces the small aggregate into a
+    * few partitions and would serialize the exploded stream through a
+    * handful of tasks. A multi-split source's aggregate already lands
+    * on the session's partition count, so the repartition is skipped.
+    * The probe reads the SOURCE frame (plan-time only); probing the
+    * aggregate itself would materialize its query stages under AQE. */
   private def respreadIfSmall(source: DataFrame, df: DataFrame)
       : DataFrame = {
     val parts = source.sparkSession.sessionState.conf.numShufflePartitions
@@ -154,10 +153,10 @@ object Dedup {
     if (w == hs.length) hs else java.util.Arrays.copyOf(hs, w)
   }
 
-  /** Distinct 64-bit shingle hashes per doc (order-insensitive set).
-    * Hash identity is engine-internal: set sizes and intersections —
-    * the quantities Jaccard needs — are preserved up to 2^-64-odds
-    * collisions. */
+  /** Distinct 64-bit shingle hashes per doc, ascending (see
+    * [[sortedDistinctHashes]]). Hash identity is engine-internal: set
+    * sizes and intersections — the quantities Jaccard needs — are
+    * preserved up to 2^-64-odds collisions. */
   private def shingleHashesUdf(n: Int) =
     org.apache.spark.sql.functions.udf { (text: String) =>
       sortedDistinctHashes(text, n)
@@ -225,22 +224,16 @@ object Dedup {
     * cap df (drop stop-shingles, documented semantics change) or use
     * minhashLshPairs, which is the designed 100-TB path.
     *
-    * DUPLICATION-ADAPTIVE since round 13 (the q68/q115 census pattern,
-    * closing the last 100x-tier boundary): docs with byte-identical
-    * shingle sets contract to one representative before co-occurrence
-    * pair generation — under mass duplication every shingle's df
-    * multiplies by the clique size and the per-shingle d^2/2 emission
-    * goes quadratic PER CLIQUE, which is what used to exhaust spill
-    * disk at the 100x tier. The contracted output re-expands from
-    * class membership, bit-identical to the all-pairs result
-    * (intra-class pairs are J = round(1 + 1e-9, 4) = 1.0 by
-    * construction; cross-class scores equal the rep pair's because
-    * members share their rep's exact shingle set). Dup-free corpora
-    * pay ONE single-distinct census agg and keep the original
-    * unpersisted plan. Same input contract as
+    * Duplication-adaptive ([[adaptiveSelfPairs]]): docs with identical
+    * shingle sets contract to one representative before pair
+    * generation, so a clique of byte-identical docs does not multiply
+    * every shingle's df by its size (the per-shingle d^2/2 emission
+    * would go quadratic per clique). The output re-expands from class
+    * membership and equals the all-pairs result: intra-class pairs
+    * score round(1 + 1e-9, 4) = 1.0, and cross-class members share
+    * their rep's exact shingle set. Same input contract as
     * [[EditDistanceJoin.selfJoin]]: `df` must be deterministic under
-    * re-execution, and repeated ids keep the uncontracted plan
-    * verbatim (the ids-unique gate). */
+    * re-execution, and repeated ids keep the uncontracted plan. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): DataFrame = {
     // Jaccard's codomain is (0, 1]: outside it the score filter is
@@ -265,53 +258,47 @@ object Dedup {
   }
 
   /** The exact co-occurrence pipeline over a prepared (id, shs, sz)
-    * sets frame — jaccardPairs' original plan, factored so the
-    * duplication-adaptive wrapper can run it over class
-    * representatives. */
+    * sets frame. Carrying sz through the member lists replaces a
+    * per-doc size aggregation and two size joins. */
   private def jaccardPairsOverSets(sets: DataFrame,
       idType: org.apache.spark.sql.types.DataType,
-      threshold: Double): DataFrame = {
-    // carrying sz through the pipeline eliminates the separate per-doc
-    // size aggregation and the two size joins of the naive formulation
-    // (6 exchanges -> 2)
-    val sh = sets.select(col("id"), col("sz"), explode(col("shs")).as("h"))
-    // pair generation via per-shingle member lists + map-side
-    // combination explode — one shuffle on shingle hash, pairs never
-    // re-shuffle the shingle rows (an equivalent self-join doubles the
-    // shuffle and was 3-5x slower cold at sf0.1)
-    val byShingle = sh.groupBy("h")
+      threshold: Double): DataFrame =
+    cooccurrenceJaccard(respreadIfSmall(sets, memberLists(
+        sets.select(col("id"), col("sz"), explode(col("shs")).as("h")))),
+      idType, threshold)
+
+  /** Per-shingle member lists over exploded (id, sz, h) rows: one
+    * shuffle on the shingle hash, members sorted (Catalyst order) so
+    * pairEmitUdf emits id_a < id_b, and shingles held by one doc
+    * dropped. Pairs explode from these lists map-side and never
+    * re-shuffle the shingle rows (an equivalent self-join doubles the
+    * shuffle). */
+  private def memberLists(exploded: DataFrame): DataFrame =
+    exploded.groupBy("h")
       .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
         .as("ms"))
       .where(size(col("ms")) > 1)
-    // re-spread before the pair explosion: AQE coalesces the (small)
-    // per-shingle aggregate into few partitions, which would serialize
-    // the (large) exploded pair stream through one task. SCALE-GATED
-    // since round 19 (the fan() probe): on a multi-split corpus the
-    // groupBy's own shuffle already spreads, and the repartition was a
-    // full re-shuffle of the shingle aggregate.
-    val pairs = respreadIfSmall(sets, byShingle)
-      .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
+
+  /** The 4-dp Jaccard of a pair from its intersection size `inter` and
+    * set sizes `sz_a`/`sz_b`. */
+  private def roundedJaccard: Column =
+    round(col("inter").cast("double") /
+      (col("sz_a") + col("sz_b") - col("inter")).cast("double") + 1e-9, 4)
+
+  /** Pair explosion → intersection count → rounded Jaccard over member
+    * lists (see [[memberLists]]) that the caller has already spread,
+    * so the caller's choice of re-spread decides every exchange.
+    * Output (id_a, id_b, jaccard) with jaccard >= threshold. */
+  private def cooccurrenceJaccard(lists: DataFrame,
+      idType: org.apache.spark.sql.types.DataType,
+      threshold: Double): DataFrame =
+    lists.select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
       .select(col("p.*"))
-    val inter = pairs.groupBy("id_a", "id_b", "sz_a", "sz_b")
+      .groupBy("id_a", "id_b", "sz_a", "sz_b")
       .agg(count(lit(1)).as("inter"))
-    inter
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double") + 1e-9, 4))
+      .withColumn("jaccard", roundedJaccard)
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Sorted distinct shingle hashes per doc (ascending — the global
-    * order prefix filtering requires; same primitive sort+dedup as
-    * shingleHashesUdf). */
-  private def sortedShingleUdf(n: Int) =
-    org.apache.spark.sql.functions.udf { (text: String) =>
-      sortedDistinctHashes(text, n)
-    }
-
-  // codegen'd merge-scan (graft.expr.SortedLongIntersect): the ScalaUDF
-  // form paid a per-call boxed-Seq conversion that dominated the verify
-  // stage at sf0.1
 
   /** Exact jaccard pairs via PREFIX FILTERING (SSJoin/PPJoin): under a
     * common global order of shingles, any pair with J >= t shares an
@@ -327,26 +314,40 @@ object Dedup {
     * formulation for high thresholds. At low thresholds the prefix is
     * nearly the whole set — use jaccardPairs there.
     *
-    * Scale boundary CLOSED in round 12: mass duplication used to turn
-    * every prefix shingle into a stop-shingle (df = clique size x
-    * classes) and candidate emission went quadratic per shingle —
-    * billions of pre-distinct rows that exhausted spill disk at the
-    * 30x dup-stress tier. The operator is now DUPLICATION-ADAPTIVE:
-    * docs with byte-identical shingle sets contract to one
-    * representative before prefix generation (candidate volume
-    * quadratic per representative set, not per clique), and the
-    * output re-expands from class membership — bit-identical to the
-    * all-pairs result (intra-class pairs are J=1 by construction;
-    * J(x, y) of cross-class members equals J(rep_x, rep_y) because
-    * members share their rep's exact shingle set). */
+    * Duplication-adaptive through [[adaptiveSelfPairs]]: under mass
+    * duplication every prefix shingle becomes a stop-shingle (df =
+    * clique size x classes) and candidate emission goes quadratic per
+    * shingle; contracting identical shingle sets keeps it quadratic
+    * per representative set. The census digests the persisted
+    * shingle-set arrays, not the text: each doc is signed once, and
+    * byte-different docs with identical sets contract too. */
   def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double): DataFrame =
-    jaccardPairsPrefixScoped(df, idCol, textCol, n, threshold)._1
+      n: Int, threshold: Double): DataFrame = {
+    // Jaccard's codomain is (0, 1]: outside it the prefix length is
+    // meaningless and the intra-class 1.0 emission would disagree with
+    // a threshold > 1 verify
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"jaccard threshold must be in (0, 1]; got $threshold")
+    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
+    val sets = df.select(col(idCol).as("id"),
+        shingleHashesUdf(n)(col(textCol)).as("shs"))
+      .where(size(col("shs")) > 0)
+      .withColumn("sz", size(col("shs")))
+    // persisted (swap before persist — the ReleaseSlot ordering
+    // contract): the census, the prefix explode and both verify-join
+    // sides read it, and the shingling UDF must run once
+    prefixSetsSlot.swap(sets.sparkSession, () => { sets.unpersist(); () })
+    sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    adaptiveSelfPairs(
+      sets.select(col("id"), xxhash64(col("shs")).as("dg")),
+      sets, "id", Seq("shs"),
+      s => prefixPairsOverSets(s, idType, threshold),
+      lit(1.0), "jaccard", prefixSlot)
+  }
 
   /** The PPJoin prefix -> candidate -> verify pipeline over a prepared
     * (id, shs, sz) sets frame (persisted by the caller — three plan
-    * branches read it). Factored out so the duplication-adaptive
-    * wrapper can run the same pipeline over class representatives. */
+    * branches read it). */
   private def prefixPairsOverSets(sets: DataFrame,
       idType: org.apache.spark.sql.types.DataType,
       threshold: Double): DataFrame = {
@@ -359,13 +360,7 @@ object Dedup {
     val pref = sets.select(col("id"), col("sz"),
       explode(slice(col("shs"), lit(1), greatest(prefixLen, lit(1))))
         .as("h"))
-    val byShingle = pref.groupBy("h")
-      .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
-        .as("ms"))
-      .where(size(col("ms")) > 1)
-    // scale-gated re-spread — same rationale as jaccardPairsOverSets
-    // (round 19)
-    val cand = respreadIfSmall(sets, byShingle)
+    val cand = respreadIfSmall(sets, memberLists(pref))
       .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
@@ -376,17 +371,14 @@ object Dedup {
     // tier, killed by maxResultSize; AQE cannot demote a cached-side
     // broadcast because there is no shuffle stage to re-plan). Sort-
     // merge keeps both sides spillable at any corpus size.
-    val verified = cand
+    cand
       .join(sets.select(col("id").as("id_a"), col("shs").as("shs_a"),
         col("sz").as("sz_a")).hint("merge"), "id_a")
       .join(sets.select(col("id").as("id_b"), col("shs").as("shs_b"),
         col("sz").as("sz_b")).hint("merge"), "id_b")
       .withColumn("inter", graft.expr.VectorOps.intersectSortedLongs(
         col("shs_a"), col("shs_b")))
-    verified
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double")
-        + 1e-9, 4))
+      .withColumn("jaccard", roundedJaccard)
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -420,244 +412,28 @@ object Dedup {
       }, out)
   }
 
-  /** jaccardPairsPrefix plus an explicit release hook for the internal
-    * caches (the shingle-set frame, and the contracted-class +
-    * suspect frames when the corpus has duplicates). Call the
-    * returned thunk AFTER the last action on the returned DataFrame —
-    * calling it earlier just makes the remaining branches recompute
-    * (correctness unaffected). A module ReleaseSlot ALSO frees the
-    * previous invocation's caches on each call (double-unpersist is
-    * idempotent), so callers of the bare jaccardPairsPrefix — which
-    * discards the thunk — pin at most one invocation's frames, never
-    * an unbounded history.
-    *
-    * Duplication-adaptive contraction (round 12): the census digests
-    * xxhash64 over the SHINGLE-SET array, not over the text the way
-    * [[jaccardSpanningEdges]] does — the prefix operator persists its
-    * shingle sets anyway, so digesting the cached arrays rides a cache
-    * the pipeline already pays for (no second text scan), and it
-    * contracts strictly more (byte-different docs with identical
-    * shingle sets share a digest class too). The census is ROUTING
-    * ONLY: classes group by the FULL shingle array, so a digest
-    * collision just adds a doc to the exact grouping, and a missed
-    * class stays uncontracted (quadratic for that class only) — output
-    * is unaffected in both directions. Both census totals come from
-    * ONE aggregation job, the same job that materializes the sets
-    * cache. */
-  def jaccardPairsPrefixScoped(df: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double)
-      : (DataFrame, () => Unit) = {
-    // Jaccard's codomain is (0, 1]: a threshold outside it makes the
-    // prefix length formula meaningless below and — worse — silently
-    // breaks the contraction's bit-identity above (intra-class pairs
-    // are emitted at 1.0 unconditionally, which a verify stage with
-    // threshold > 1 would have filtered). Reject, don't guess.
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"jaccard threshold must be in (0, 1]; got $threshold")
-    import org.apache.spark.storage.StorageLevel
-    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-    // release the PREVIOUS invocation's caches before persisting this
-    // one's (the ReleaseSlot ordering contract): callers of the bare
-    // jaccardPairsPrefix discard the returned thunk, and the adaptive
-    // path can pin up to three frames per call — without the slot a
-    // long-lived session accumulates them across invocations.
-    prefixSlot.releasePrevious(df.sparkSession)
-    // persisted: three plan branches read it (prefix explode + both
-    // verify-join sides) — without the persist the shingling UDF runs
-    // over the full corpus three times. LRU-evictable; disk-spill for
-    // corpora beyond executor memory.
-    val sets = df.select(col(idCol).as("id"),
-        sortedShingleUdf(n)(col(textCol)).as("shs"))
-      .where(size(col("shs")) > 0)
-      .withColumn("sz", size(col("shs")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // hook registered IMMEDIATELY after the persist, before any
-    // action that can throw (census, ids gate): an exception between
-    // persist and set() would otherwise orphan the cache for the
-    // session lifetime — every later releasePrevious() a no-op on it.
-    // Branches below overwrite with fuller hooks as more frames pin.
-    prefixSlot.set(df.sparkSession, () => { sets.unpersist(); () })
-    val dg = sets.select(col("id"), xxhash64(col("shs")).as("dg"))
-    val classCounts = dg.groupBy("dg").agg(count(lit(1)).as("c"))
-    // FUSED census + ids gate (round 18 — the adaptiveSelfPairs
-    // pattern backported): ONE action over the just-persisted sets
-    // cache answers the duplication census AND the ids-unique gate,
-    // where the r12 form paid a second driver round-trip (head()) for
-    // the gate on every duplicated corpus. The gate must stay GLOBAL
-    // (count_distinct over ALL ids): with only per-class uniqueness an
-    // id repeated across two census classes could lift into a (x, x)
-    // self-pair the legacy plan never emits.
-    val stats = classCounts.agg(sum(col("c")).as("docs"),
-      sum(when(col("c") > lit(1L), col("c"))).as("sus"))
-    val gate = sets.agg(count_distinct(col("id")).as("nids"))
-    val tot = stats.crossJoin(gate).head()
-    val nDocs = if (tot.isNullAt(0)) 0L else tot.getLong(0)
-    val nSuspects = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-    if (nSuspects == 0L) {
-      // no duplicated shingle set anywhere: contraction cannot change
-      // the candidate volume — run the plain pipeline, zero overhead
-      // beyond the census aggregation itself
-      val out = prefixPairsOverSets(sets, idType, threshold)
-      val rel = () => { sets.unpersist(); () }
-      prefixSlot.set(df.sparkSession, rel)
-      return (out, rel)
-    }
-    // ids-unique gate (same contract as EditDistanceJoin.selfJoin):
-    // the re-expansion's bit-identity proof assumes ids identify rows
-    // — a repeated id makes the membership lift emit per-OCCURRENCE
-    // multiplicities and classPairUdf emit self-pairs the uncontracted
-    // plan never produces. Such degenerate inputs keep the original
-    // plan verbatim (documented quadratic-per-clique boundary). The
-    // agg reads the persisted sets snapshot the census just
-    // materialized, so both sides of the comparison describe the same
-    // execution.
-    val idsUnique = tot.getLong(2) == nDocs
-    if (!idsUnique) {
-      val out = prefixPairsOverSets(sets, idType, threshold)
-      val rel = () => { sets.unpersist(); () }
-      prefixSlot.set(df.sparkSession, rel)
-      return (out, rel)
-    }
-    // suspect/cold routing, same tiers as jaccardSpanningEdges:
-    //  - every doc a suspect, or too many to broadcast: group ALL docs
-    //    (the grouping is exact, routing merely skips it for cold docs);
-    //  - small set: a literal IN-set filter (driver-collected, bounded
-    //    well below where task-binary serialization dominates);
-    //  - otherwise: broadcast semi/anti joins on the slim suspect ids
-    //    (persisted lazily so the second broadcast build reads the
-    //    cached ids instead of re-scanning the array-heavy sets cache)
-    var suspectsCache: Option[DataFrame] = None
-    val (hot, cold) =
-      if (nSuspects == nDocs || nSuspects > SpanningMaxLocalSuspects)
-        (sets, sets.where(lit(false)))
-      else if (nSuspects <= SpanningInSetSuspects) {
-        val suspectIds = dg.join(classCounts.where(col("c") > lit(1L))
-            .select("dg"), "dg").select("id")
-          .collect().map(_.get(0)).filter(_ != null).toSeq
-        // null-safety: coalesce the IN to false so the cold side (!in)
-        // never drops rows — null ids match nothing and stay cold
-        val in =
-          if (suspectIds.isEmpty) lit(false)
-          else coalesce(col("id").isInCollection(suspectIds), lit(false))
-        (sets.where(in), sets.where(!in))
-      } else {
-        val suspects = dg.join(classCounts.where(col("c") > lit(1L))
-            .select("dg"), "dg").select("id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        suspectsCache = Some(suspects)
-        prefixSlot.set(df.sparkSession,
-          () => { sets.unpersist(); suspects.unpersist(); () })
-        // materialize before the main query — the concurrent semi/anti
-        // broadcast builds would otherwise race past the lazy cache
-        // and each re-scan the array-heavy sets cache
-        suspects.count()
-        (sets.join(broadcast(suspects), Seq("id"), "left_semi"),
-         sets.join(broadcast(suspects), Seq("id"), "left_anti"))
-      }
-    // exact classes: FULL sorted shingle array as the key (never the
-    // digest); rep = min member under Catalyst's own type ordering
-    val classes = hot.groupBy("shs")
-      .agg(min(col("id")).as("rep"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val rel = () => { sets.unpersist(); classes.unpersist()
-      suspectsCache.foreach(_.unpersist()); () }
-    prefixSlot.set(df.sparkSession, rel)
-    // materialize before the main query (round 18 — the
-    // adaptiveSelfPairs discipline backported): the two lift builds,
-    // both intra branches, and the reps union all read `classes`
-    // concurrently, and a lazy persist loses that race — each branch
-    // would recompute the hot scan + class groupBy lineage instead of
-    // reading the cache. One tiny job (suspect-bounded rows).
-    classes.count()
-    val reps = classes.select(col("rep").as("id"), col("shs"),
-        size(col("shs")).as("sz"))
-      .union(cold.select(col("id"), col("shs"), col("sz")))
-    val repPairs = prefixPairsOverSets(reps, idType, threshold)
-    // re-expansion. Intra-class pairs are J=1 by construction (same
-    // round(1 + 1e-9, 4) = 1.0 the verify stage computes for identical
-    // sets). Cross pairs lift each rep pair to all member combinations
-    // via two membership joins; members of distinct classes are
-    // distinct ids, so no pair is emitted twice and least/greatest
-    // (Catalyst ordering, matching sort_array upstream of pairEmitUdf)
-    // restores the id_a < id_b canonical form.
-    val members = classes.select(col("rep"),
-      explode(col("members")).as("m"))
-    // lift join strategy TIERED like the routing (round 18 — the
-    // adaptiveSelfPairs tiering backported; its A/B note: a merge hint
-    // here forced two full sorts of the operator's ENTIRE pair output,
-    // dominating the lift on lightly-duplicated corpora): on the
-    // suspect tiers `members` is bounded by the suspect count (two
-    // scalar columns — megabytes at the 1M cap), so an explicit
-    // broadcast keeps the pair stream un-sorted and un-shuffled; on
-    // the group-all tier members spans the corpus, so sort-merge keeps
-    // both sides spillable (the hint matters: a static broadcast pick
-    // off optimistic cached stats cannot be demoted by AQE).
-    val liftBroadcastable =
-      nSuspects < nDocs && nSuspects <= SpanningMaxLocalSuspects
-    def liftSide(as: String, out: String) = {
-      val m = members.select(col("rep").as(as), col("m").as(out))
-      if (liftBroadcastable) broadcast(m) else m.hint("merge")
-    }
-    // size-gated: the shuffle-free explode materializes one
-    // m(m-1)/2-element array PER ROW, which is the fast path for
-    // ordinary clique sizes but an allocation cliff for mega-classes
-    // (m=1e5 would build 5e9 Rows in a single task). Classes past the
-    // cap stream their pairs through a self-join on rep instead —
-    // same emitted set (members are distinct and `<` is the Catalyst
-    // ordering sort_array used), spillable at any class size.
-    val smallIntra = classes.where(size(col("members")) > 1 &&
-        size(col("members")) <= IntraExplodeCap)
-      .select(explode(classPairUdf(idType)(col("members"))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), lit(1.0).as("jaccard"))
-    val bigMembers = classes.where(size(col("members")) > IntraExplodeCap)
-      .select(col("rep"), explode(col("members")).as("m"))
-    val bigIntra = bigMembers.select(col("rep"), col("m").as("id_a"))
-      .join(bigMembers.select(col("rep"), col("m").as("id_b"))
-        .hint("merge"), Seq("rep"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    val intra = smallIntra.union(bigIntra)
-    val cross = repPairs
-      .join(liftSide("id_a", "xa"), Seq("id_a"), "left")
-      .join(liftSide("id_b", "xb"), Seq("id_b"), "left")
-      .withColumn("a2", coalesce(col("xa"), col("id_a")))
-      .withColumn("b2", coalesce(col("xb"), col("id_b")))
-      .select(least(col("a2"), col("b2")).as("id_a"),
-        greatest(col("a2"), col("b2")).as("id_b"), col("jaccard"))
-    val out = cross.union(intra)
-    (out, rel)
-  }
-
-  private val prefixSlot = ReleaseSlot()
-
-  /** Duplication-adaptive self-pair harness — the q68/q115 census →
-    * contract → verify-among-reps → re-expand pattern, generalized
-    * for every exact pair emitter whose score is INVARIANT under
-    * byte-identical contraction (J of identical shingle sets, hamming
-    * of identical signatures, cosine of identical vectors).
+  /** Duplication-adaptive self-pair harness — census → contract →
+    * verify among representatives → re-expand, for every exact pair
+    * emitter whose score is INVARIANT under byte-identical contraction
+    * (J of identical shingle sets, hamming of identical signatures,
+    * cosine of identical vectors).
     *
     * `slim` is the operator's prepared per-doc frame: an `idCol`
     * column plus the exact contraction key columns (`keyCols`) plus
     * any derived payload columns (functions of the key — carried via
     * first() through the class agg). `census` is a SEPARATE cheap
-    * (`idCol`, dg) frame over the operator's raw input whose `dg`
-    * column fingerprints each row BEFORE the operator's (expensive)
-    * signing UDF runs — in practice xxhash64 of the raw text, a native
-    * codegen'd scan. The census is ROUTING-ONLY in both directions:
-    * a digest collision (or byte-different rows that happen to share
-    * an exact key) routes a corpus into the contraction path, where
-    * classes group by the FULL key and singleton classes reproduce
-    * the uncontracted output; a census that finds no dups keeps the
+    * (`idCol`, dg) frame whose `dg` column fingerprints each row —
+    * xxhash64 of the raw text, or of a signature the caller has already
+    * persisted, so the signing UDF never runs just to answer "any
+    * dups?". The census is ROUTING-ONLY in both directions: a digest
+    * collision (or byte-different rows that happen to share an exact
+    * key) routes a corpus into the contraction path, where classes
+    * group by the FULL key and singleton classes reproduce the
+    * uncontracted output; a census that finds no dups keeps the
     * original plan, which is exact regardless. What the census MUST
     * catch for the scale protection to engage is byte-identical
     * replication — mass duplication, the regime that kills the
     * quadratic emitters — and any row-level fingerprint does.
-    * Censusing raw bytes instead of derived keys is deliberate: the
-    * derived-key census (first cut of round 13) re-ran the signing
-    * UDF just to answer "any dups?", doubling every dup-free
-    * corpus's dominant cost; the raw scan answers it for the price
-    * of a hash pass (same-window A/B in COVERAGE.md's perf log).
     *
     * `core` runs the operator's original pipeline over a slim-shaped
     * frame and must return (id_a, id_b, `scoreName`) with id_a < id_b
@@ -665,17 +441,15 @@ object Dedup {
     * plan provably computes for two rows with identical keys.
     *
     * Staging mirrors EditDistanceJoin.selfJoin: a dup-free corpus
-    * pays ONE hash-scan census agg and keeps the original plan with
-    * nothing pinned. The contraction path pins the (id, dg) census —
-    * 16 bytes a row — and answers the ids gate and suspect
-    * identification from that snapshot (repeated ids break the
-    * membership lift's bit-identity proof — such degenerate inputs
-    * keep the uncontracted plan verbatim); the HEAVY slim frame is
-    * persisted only on the tiers that re-read it wholesale
-    * (broadcast-suspects, group-all), never on the IN-set tier where
-    * the id predicate pushes below the signing UDF and the plan
-    * keeps the original cost shape. Re-expansion flows through
-    * size-gated membership joins.
+    * pays ONE census agg and keeps the original plan with nothing
+    * pinned. The contraction path pins the (id, dg) census — 16 bytes
+    * a row — answers the ids gate and suspect identification from that
+    * snapshot (repeated ids break the membership lift's bit-identity
+    * proof — such degenerate inputs keep the uncontracted plan
+    * verbatim), and routes suspects through [[routeSuspects]], which
+    * persists the heavy slim frame only on the tiers that re-read it
+    * wholesale. Re-expansion flows through size-gated membership
+    * joins.
     *
     * Input contract (same as selfJoin): the input's lineage must be
     * deterministic under re-execution — the census and the dup-free
@@ -690,97 +464,29 @@ object Dedup {
     val sess = slim.sparkSession
     val idType = slim.schema(slim.schema.fieldIndex(idCol)).dataType
     slot.releasePrevious(sess)
-    // FUSED census + ids gate (round-14 verdict item 5, A/B-adopted):
-    // persist first, then ONE action answers the duplication census
-    // AND the ids-unique gate via a crossJoin of the two single-row
-    // aggregates over the cached (id, dg) frame — the cache's
-    // block-level locking means one raw-text scan builds the blocks
-    // and the second subtree reads them, where the unfused form's
-    // contraction path scanned the raw input TWICE (census agg, then
-    // gate materializing the cache) with a driver round-trip between.
-    // Same-window A/B (COVERAGE.md round-14 perf log): trio total
-    // 8.11-8.36 → 7.29-7.95 s at sf0.1; at corpus scale the saving is
-    // a whole raw scan per contraction-engaged query. The dup-free
-    // path now writes the (16-byte-a-row) census cache it immediately
-    // releases — bounded by a <2%-of-scan overhead, priced in the
-    // same log.
-    //
-    // The gate must stay GLOBAL (count_distinct over ALL ids, a
-    // second grouping — why this is a two-subtree action, not one
-    // single-grouping aggregation): with only per-class uniqueness,
-    // an id repeated across two census classes — same id, different
-    // bytes — lets a lifted rep pair expand through the repeated id
-    // into a (x, x) self-pair the legacy plan can never emit. A
-    // raw-level repeat conservatively keeps the uncontracted plan,
-    // exactly the documented degenerate boundary; uniqueness over the
-    // RAW rows implies uniqueness over the (possibly filtered) slim
-    // frame.
+    // FUSED census + ids gate: the census frame is persisted first,
+    // then ONE action answers both through a crossJoin of two
+    // single-row aggregates, so the input is scanned once. The gate
+    // must stay GLOBAL (count_distinct over ALL ids): with only
+    // per-class uniqueness, an id repeated across two census classes
+    // lets a lifted rep pair expand into an (x, x) self-pair the
+    // uncontracted plan never emits. Uniqueness over the raw rows
+    // implies uniqueness over the (possibly filtered) slim frame.
     val cen = census.persist(StorageLevel.MEMORY_AND_DISK)
-    // hook registered IMMEDIATELY after the persist (release-slot
-    // exception-window contract): the fused action below can throw
+    // hook registered before the action below can throw
     slot.set(sess, () => { cen.unpersist(false); () })
-    val stats = cen.groupBy("dg").agg(count(lit(1)).as("c"))
-      .agg(sum(col("c")).as("n"),
-        sum(when(col("c") > lit(1L), col("c"))).as("sus"))
+    val (stats, dupIds) = censusOf(cen, idCol)
     val gate = cen.agg(count(lit(1)).as("nb"),
       count_distinct(col(idCol)).as("nids"))
     val tot = stats.crossJoin(gate).head()
     val n = if (tot.isNullAt(0)) 0L else tot.getLong(0)
     val nSuspects = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-    // dup-free / repeated-id early exits release the census pin at
-    // once — nothing downstream reads it
-    if (nSuspects == 0L) {
+    // dup-free or repeated ids: the uncontracted plan; the census pin
+    // is released at once — nothing downstream reads it
+    if (nSuspects == 0L || tot.getLong(3) != tot.getLong(2)) {
       slot.releasePrevious(sess); return core(slim)
     }
-    if (tot.getLong(3) != tot.getLong(2)) {
-      slot.releasePrevious(sess); return core(slim)
-    }
-    // suspect/cold routing, the q68 tiers: contraction only has to
-    // touch members of DUPLICATED census classes — on a lightly
-    // duplicated corpus (the realistic steady state after upstream
-    // hygiene) everything else must flow through the original plan
-    // untouched, not pay a groupBy on a multi-KB key. Small suspect
-    // sets ride a literal IN filter over the UNPERSISTED slim frame
-    // (the id predicate pushes below the signing UDF, so hot/cold
-    // scans sign only what they keep — the original plan's cost
-    // shape); large ones persist slim and broadcast semi/anti joins;
-    // mass duplication groups everything (grouping is exact either
-    // way — routing only decides WHO).
-    val dupIds = cen
-      .join(cen.groupBy("dg").agg(count(lit(1)).as("c"))
-        .where(col("c") > lit(1L)).select("dg"), "dg")
-      .select(col(idCol))
-    var heavyCaches: List[DataFrame] = Nil
-    val (hot, cold) =
-      if (nSuspects == n || nSuspects > SpanningMaxLocalSuspects) {
-        val base = slim.persist(StorageLevel.MEMORY_AND_DISK)
-        heavyCaches = List(base)
-        slot.set(sess, () => { cen.unpersist(false)
-          base.unpersist(false); () })
-        (base, base.where(lit(false)))
-      } else if (nSuspects <= SpanningInSetSuspects) {
-        val suspectIds = dupIds.collect().map(_.get(0))
-          .filter(_ != null).toSeq
-        // null-safety: coalesce the IN to false so the cold side
-        // (!in) never drops rows — null ids match nothing, stay cold
-        val in =
-          if (suspectIds.isEmpty) lit(false)
-          else coalesce(col(idCol).isInCollection(suspectIds),
-            lit(false))
-        (slim.where(in), slim.where(!in))
-      } else {
-        val suspects = dupIds.persist(StorageLevel.MEMORY_AND_DISK)
-        val base = slim.persist(StorageLevel.MEMORY_AND_DISK)
-        heavyCaches = List(base, suspects)
-        slot.set(sess, () => { cen.unpersist(false)
-          base.unpersist(false); suspects.unpersist(); () })
-        // materialize before the main query — two concurrent
-        // broadcast builds would race past the lazy cache and each
-        // recompute the census lineage
-        suspects.count()
-        (base.join(broadcast(suspects), Seq(idCol), "left_semi"),
-         base.join(broadcast(suspects), Seq(idCol), "left_anti"))
-      }
+    val route = routeSuspects(slim, idCol, dupIds, nSuspects, n)
     val payload = slim.columns
       .filterNot(c0 => c0 == idCol || keyCols.contains(c0))
     val aggs =
@@ -790,21 +496,20 @@ object Dedup {
     // exact classes: the FULL key, never the digest; rep = min member
     // under Catalyst's own type ordering (matches sort_array, least/
     // greatest, and classPairUdf's i<j emission)
-    val classes = hot.groupBy(keyCols.map(col): _*)
+    val classes = route.hot.groupBy(keyCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val pinned = cen :: classes :: heavyCaches
+    val pinned = cen :: classes :: route.pinned
     slot.set(sess, () => { pinned.foreach(_.unpersist(false)); () })
-    // materialize before the main query for the same reason as the
-    // suspects cache above: the two broadcast lift builds and the
-    // intra branches all read `classes` concurrently, and lazy
-    // persists lose that race — each build would recompute the hot
-    // scan + signing + groupBy lineage instead of reading the cache
+    // materialize before the main query: the two lift builds and the
+    // intra branches read `classes` concurrently, and a lazy persist
+    // loses that race — each would recompute the hot scan + signing +
+    // groupBy lineage instead of reading the cache
     classes.count()
     val reps = classes.select(slim.columns.toIndexedSeq.map {
       case c0 if c0 == idCol => col("rep").as(idCol)
       case other             => col(other)
-    }: _*).union(cold)
+    }: _*).union(route.cold)
     val repPairs = core(reps)
     // cast the intra constant to the score's EXACT type so the union
     // never widens the operator's declared schema
@@ -814,21 +519,17 @@ object Dedup {
     val members = classes.select(col("rep"),
       explode(col("members")).as("m"))
     // lifts are LEFT joins with identity coalesce: a cold endpoint is
-    // its own lift (it was never grouped). Join strategy is TIERED
-    // like the routing: on the suspect tiers the members frame is
-    // bounded by the suspect count (two scalar columns — megabytes at
-    // the 1M cap), so an EXPLICIT broadcast keeps the pair stream
-    // un-sorted and un-shuffled (a merge hint here forced two full
-    // sorts of the operator's entire output — dominated the lift on
-    // lightly-duplicated corpora); on the group-all tier members
-    // spans the corpus, so sort-merge keeps both sides spillable
-    // (and the hint matters: a static broadcast pick off optimistic
-    // cached stats cannot be demoted by AQE).
-    val liftBroadcastable =
-      nSuspects < n && nSuspects <= SpanningMaxLocalSuspects
+    // its own lift (it was never grouped). Off the group-all tier the
+    // members frame is bounded by the suspect count (two scalar
+    // columns), so an EXPLICIT broadcast keeps the pair stream
+    // un-sorted and un-shuffled (a merge hint here sorts the operator's
+    // entire output twice); on the group-all tier members spans the
+    // corpus, so sort-merge keeps both sides spillable (the hint
+    // matters: a static broadcast pick off optimistic cached stats
+    // cannot be demoted by AQE).
     def liftSide(as: String, out: String) = {
       val m = members.select(col("rep").as(as), col("m").as(out))
-      if (liftBroadcastable) broadcast(m) else m.hint("merge")
+      if (route.liftBroadcastable) broadcast(m) else m.hint("merge")
     }
     val cross = repPairs
       .join(liftSide("id_a", "xa"), Seq("id_a"), "left")
@@ -837,10 +538,10 @@ object Dedup {
       .withColumn("b2", coalesce(col("xb"), col("id_b")))
       .select(least(col("a2"), col("b2")).as("id_a"),
         greatest(col("a2"), col("b2")).as("id_b"), col(scoreName))
-    // intra-class pairs at the invariant constant, size-gated exactly
-    // like the q68 re-expansion: row-local explode for ordinary
-    // classes, a rep-keyed self-join past the cap so no mega-clique
-    // materializes m(m-1)/2 rows in one task
+    // intra-class pairs at the invariant constant, size-gated: a
+    // row-local explode for ordinary classes, a rep-keyed self-join
+    // past the cap so no mega-clique materializes m(m-1)/2 rows in one
+    // task
     val smallIntra = classes.where(size(col("members")) > 1 &&
         size(col("members")) <= IntraExplodeCap)
       .select(explode(classPairUdf(idType)(col("members"))).as("p"))
@@ -855,18 +556,89 @@ object Dedup {
     cross.unionByName(smallIntra).unionByName(bigIntra)
   }
 
-  /** Release slots for the round-13 adaptive pair emitters (one
-    * in-flight invocation per operator per JVM — the ReleaseSlot
-    * concurrency contract). */
+  /** Duplication census over a persisted (`idCol`, dg) digest frame:
+    * `stats` is one row (docs, suspects), suspects being the rows whose
+    * digest repeats, and `dupIds` the suspect ids (lazy — only the
+    * routing tiers that need them evaluate it). */
+  private def censusOf(cen: DataFrame, idCol: String)
+      : (DataFrame, DataFrame) = {
+    val classCounts = cen.groupBy("dg").agg(count(lit(1)).as("c"))
+    (classCounts.agg(sum(col("c")).as("n"),
+       sum(when(col("c") > lit(1L), col("c"))).as("sus")),
+     cen.join(classCounts.where(col("c") > lit(1L)).select("dg"), "dg")
+       .select(col(idCol)))
+  }
+
+  /** `hot`: the rows the exact class machinery groups; `cold`: the rows
+    * that pass through as their own representatives. `pinned`: every
+    * frame the routing persisted, for the caller's release hook.
+    * `liftBroadcastable`: off the group-all tier, where the class
+    * membership frame is bounded by the suspect count. */
+  private final case class SuspectRoute(hot: DataFrame, cold: DataFrame,
+      pinned: List[DataFrame], liftBroadcastable: Boolean)
+
+  /** Suspect/cold routing for the adaptive emitters, the cheapest tier
+    * that fits the census's suspect count. On a lightly duplicated
+    * corpus everything but the suspects flows through the original
+    * plan untouched instead of paying a groupBy on a multi-KB key.
+    *  - every row a suspect, or more than [[SpanningMaxLocalSuspects]]:
+    *    group all rows;
+    *  - at most [[SpanningInSetSuspects]]: a literal IN filter over the
+    *    collected suspect ids, which pushes below any signing UDF
+    *    upstream of `frame`;
+    *  - otherwise: broadcast semi/anti joins on the persisted ids.
+    * Grouping is exact on every tier; routing only decides who is
+    * grouped. The two tiers that re-read `frame` wholesale persist it,
+    * unless its caller already did (then it stays the caller's to
+    * release). */
+  private def routeSuspects(frame: DataFrame, idCol: String,
+      dupIds: DataFrame, nSuspects: Long, nDocs: Long): SuspectRoute = {
+    import org.apache.spark.storage.StorageLevel
+    val pinFrame = frame.storageLevel == StorageLevel.NONE
+    def pinnedFrame() =
+      if (pinFrame) frame.persist(StorageLevel.MEMORY_AND_DISK) else frame
+    val framePins = if (pinFrame) List(frame) else Nil
+    if (nSuspects == nDocs || nSuspects > SpanningMaxLocalSuspects) {
+      val base = pinnedFrame()
+      SuspectRoute(base, base.where(lit(false)), framePins,
+        liftBroadcastable = false)
+    } else if (nSuspects <= SpanningInSetSuspects) {
+      val ids = dupIds.collect().map(_.get(0)).filter(_ != null).toSeq
+      // null-safety: coalesce the IN to false so the cold side (!in)
+      // never drops rows — null ids match nothing and stay cold
+      val in =
+        if (ids.isEmpty) lit(false)
+        else coalesce(col(idCol).isInCollection(ids), lit(false))
+      SuspectRoute(frame.where(in), frame.where(!in), Nil,
+        liftBroadcastable = true)
+    } else {
+      val suspects = dupIds.persist(StorageLevel.MEMORY_AND_DISK)
+      val base = pinnedFrame()
+      val pins = suspects :: framePins
+      // materialize before the main query — the semi and anti
+      // broadcast builds run concurrently and would each recompute the
+      // census join past a lazy cache
+      try suspects.count()
+      catch { case e: Throwable => pins.foreach(_.unpersist(false)); throw e }
+      SuspectRoute(base.join(broadcast(suspects), Seq(idCol), "left_semi"),
+        base.join(broadcast(suspects), Seq(idCol), "left_anti"), pins,
+        liftBroadcastable = true)
+    }
+  }
+
+  /** Release slots of the adaptive emitters: one in-flight invocation
+    * per operator per session (the ReleaseSlot concurrency contract).
+    * The `…SigsSlot`/`…SetsSlot` ones hold the pre-routing signature or
+    * shingle-set frame the census rides. */
   private val pairsSlot = ReleaseSlot()
+  private val prefixSlot = ReleaseSlot()
+  private val prefixSetsSlot = ReleaseSlot()
   private val simhashPairsSlot = ReleaseSlot()
   private val portableEmbSlot = ReleaseSlot()
-
-  /** Release slots for the round-14 adaptive banded-LSH emitters
-    * (q22 fast signer, q93 portable signer) — same one-in-flight
-    * contract as the round-13 trio. */
   private val lshPairsSlot = ReleaseSlot()
+  private val lshSigsSlot = ReleaseSlot()
   private val portableLshPairsSlot = ReleaseSlot()
+  private val portableLshSigsSlot = ReleaseSlot()
 
   /** jaccardPairs with a document-frequency cap on shingles: shingles
     * shared by more than `maxDocFreq` documents are EXCLUDED from both
@@ -886,16 +658,12 @@ object Dedup {
         shingleHashesUdf(n)(col(textCol)).as("shs"))
       .where(size(col("shs")) > 0)
       .select(col("id"), explode(col("shs")).as("h"))
-    // df cap and per-doc sizes from AGGREGATIONS, not windows: the
-    // previous window formulation (count OVER partitionBy(h), then
-    // count OVER partitionBy(id)) paid two full exchange+sort passes
-    // over every (doc, shingle) row before the pairing groupBy — a
-    // +35% wall regression on q83/q86/q119 when the cap landed. One
-    // groupBy(h) applies the cap (sizes computed AFTER it so the
-    // Jaccard denominator matches the capped universe), a groupBy(id)
-    // over the survivors counts sizes, and the id-keyed equi-join ships
-    // only (id, sz) — partial aggregation does the heavy lifting
-    // map-side instead of sorting the exploded rows twice.
+    // df cap and per-doc sizes from AGGREGATIONS, not windows (a window
+    // per key is an exchange plus a full sort of every (doc, shingle)
+    // row): one groupBy(h) applies the cap, a groupBy(id) over the
+    // survivors counts sizes AFTER it (so the Jaccard denominator
+    // matches the capped universe), and the id-keyed equi-join ships
+    // only (id, sz).
     //
     // cappedCollect, NOT collect_list + size filter: collect_list
     // materializes the FULL posting list of every shingle before the
@@ -911,30 +679,19 @@ object Dedup {
     val kept = grouped.select(col("h"), explode(col("ids")).as("id"))
     val sized = kept.groupBy("id")
       .agg(count(lit(1)).cast("int").as("sz"))
-    val byShingle = kept.join(sized, "id")
-      .groupBy("h")
-      .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
-        .as("ms"))
-      .where(size(col("ms")) > 1)
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-    val pairs = byShingle.repartition(parts)
-      .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
-      .select(col("p.*"))
-    pairs.groupBy("id_a", "id_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double") + 1e-9, 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    cooccurrenceJaccard(
+      memberLists(kept.join(sized, "id")).repartition(parts),
+      idType, threshold)
   }
 
   private val spanningSlot = ReleaseSlot()
 
-  /** Bound on the suspect-id set the adaptive spanning-edge path
-    * BROADCASTS for its semi/anti routing joins (1M ids ≈ 8-40 MB);
-    * beyond it the all-docs class machinery runs instead — a corpus
-    * that duplication-heavy genuinely needs it. */
+  /** Bound on the suspect-id set the adaptive emitters BROADCAST for
+    * their semi/anti routing joins (1M ids ≈ 8-40 MB); beyond it the
+    * all-docs class machinery runs instead — a corpus that
+    * duplication-heavy genuinely needs it. */
   val SpanningMaxLocalSuspects: Int = 1000000
 
   /** Suspect sets at or under this size route via a literal IN-set
@@ -972,8 +729,8 @@ object Dedup {
     * X—rep(X)—rep(Y)—Y since J(rep(X),rep(Y)) = J(X,Y). Hence the
     * transitive closures — and any component labelling derived from
     * them — are identical, and the composites stay bit-identical to
-    * their recursive-CTE oracles while the 30× worst-case duplication
-    * proof drops from quadratic to linear pair emission.
+    * their recursive-CTE oracles while worst-case duplication drops
+    * from quadratic to linear pair emission.
     *
     * Exactness note: the class key is the full sorted shingle-hash
     * array (array equality), not a digest of it — a digest collision
@@ -983,82 +740,46 @@ object Dedup {
   def jaccardSpanningEdges(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, maxDocFreq: Int): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // Duplication-adaptive contraction (round 11). The exact-class
-    // machinery costs a perDoc cache plus two full shuffles of per-doc
-    // ARRAY keys (groupBy(key) + join-back) — pure overhead when the
-    // corpus has no exact dups, the common case outside dedup-stress
-    // tiers (+1.2 s per composite at sf0.1, measured). A scan-level
-    // census over xxhash64(text) finds byte-identical SUSPECTS first:
-    // it ships only (id, 8-byte digest) through one tiny shuffle and
-    // never touches the shingle pipeline.
+    // Duplication-adaptive contraction. The exact-class machinery
+    // costs a perDoc cache plus shuffles of per-doc ARRAY keys — pure
+    // overhead when the corpus has no exact dups — so a scan-level
+    // census over xxhash64(text) finds byte-identical SUSPECTS first,
+    // shipping only (id, 8-byte digest) through one small shuffle.
     //
     // The census is ROUTING ONLY — correctness does not depend on it
     // in either direction. Docs routed to the class machinery are
     // grouped by their FULL capped shingle array (exact); docs NOT
-    // routed simply stay their own representatives and participate in
-    // the exact thresholded pair stage, where any >= t edge between
-    // them (including J=1 edges of a shingle-identical class the text
+    // routed stay their own representatives and participate in the
+    // exact thresholded pair stage, where any >= t edge between them
+    // (including J=1 edges of a shingle-identical class the text
     // census cannot see) is emitted directly. Mis-routing therefore
-    // costs pair-emission volume, never edges: a digest collision adds
-    // one doc to the exact grouping (harmless); a shingle-identical
-    // but byte-different class stays uncontracted (quadratic for that
-    // class only — such classes are near-dups the mutated tier covers,
-    // not the mass-duplication stress case, which IS byte-identical).
-    //
-    // Census mechanics: the slim (id, digest) frame is persisted so
-    // the text column is hashed in ONE scan however many census passes
-    // read it, and both totals come from one aggregation job before
-    // anything is collected — a limit(cap+1).collect() here re-ran the
-    // census lineage several times (take()'s incremental partition
-    // scale-up re-executes the join, each attempt rebuilding the
-    // digest groupBy), which at the 30x dup-stress tier cost ~8x the
-    // whole r10 query.
+    // costs pair-emission volume, never edges. There is no ids gate:
+    // star edges and rep pairs are edges of the original graph for
+    // repeated ids too.
+    val sess = df.sparkSession
     // release the PREVIOUS invocation's caches before persisting any
-    // of this one's (the ReleaseSlot ordering contract): on repeated
-    // identical invocations Spark's CacheManager dedupes persist() by
-    // analyzed plan, so releasing after this call's persists would
-    // uncache the very entries this call relies on
-    spanningSlot.releasePrevious(df.sparkSession)
-    val t0 = System.nanoTime()
+    // of this one's (the ReleaseSlot ordering contract)
+    spanningSlot.releasePrevious(sess)
+    // persisted so the text is hashed in ONE scan however many census
+    // passes read it; both totals come from one aggregation job
     val idDg = df.select(col(idCol).as("id"),
-        xxhash64(col(textCol)).as("tdg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hook registered before the census action can throw (watchdog
-    // job-group cancel, OOM): an exception between persist and the
-    // full set() at perDoc would otherwise orphan this cache forever
-    spanningSlot.set(df.sparkSession, () => { idDg.unpersist(); () })
-    val classCounts = idDg.groupBy("tdg").agg(count(lit(1)).as("c"))
-    // ONE aggregation job yields both census totals (rounds 10-11 paid
-    // two separate count() jobs here) and fills the idDg cache the
-    // suspect join reads; `suspects` stays LAZY — the small tier
-    // collects it, the broadcast tier materializes it inside the main
-    // query (exchange reuse dedupes the two routing joins' builds),
-    // and the other tiers never compute it at all.
-    val tot = classCounts.agg(sum(col("c")).as("docs"),
-      sum(when(col("c") > lit(1L), col("c"))).as("sus")).first()
+        xxhash64(col(textCol)).as("dg"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    // hook registered before the census action can throw
+    spanningSlot.set(sess, () => { idDg.unpersist(); () })
+    val (stats, dupIds) = censusOf(idDg, "id")
+    val tot = stats.first()
     val nDocs = if (tot.isNullAt(0)) 0L else tot.getLong(0)
     val nSuspects = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-    // persisted LAZILY: no extra job — the tier that evaluates it
-    // first (small-tier collect, or the broadcast build) populates the
-    // cache, and the second broadcast build reads 6k rows instead of
-    // re-running the census join (measured +15% on q83's mutated tier
-    // when this was rebuilt per build)
-    val suspects = idDg.join(classCounts.where(col("c") > lit(1L))
-      .select("tdg"), "tdg").select("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    spanningSlot.set(df.sparkSession,
-      () => { suspects.unpersist(); idDg.unpersist(); () })
-    if (sys.env.contains("SPARK_GRAFT_SPAN_DEBUG"))
-      println(f"[span-debug] t=${System.currentTimeMillis()} suspects=$nSuspects census=${(System.nanoTime() - t0) / 1e9}%.2f s")
     if (nSuspects == 0L) {
-      suspects.unpersist(); idDg.unpersist()
+      idDg.unpersist()
       // No byte-identical docs anywhere: contraction cannot remove any
       // edge, so the spanning set IS the full capped pair graph — emit
-      // it through the proven jaccardPairsCapped plan (no perDoc
-      // cache, no array-key shuffles).
+      // it through the jaccardPairsCapped plan (no perDoc cache, no
+      // array-key shuffles).
       val edges = jaccardPairsCapped(df, idCol, textCol, n, threshold,
         maxDocFreq).select("id_a", "id_b")
-      return df.sparkSession.createDataFrame(edges.rdd, edges.schema)
+      return sess.createDataFrame(edges.rdd, edges.schema)
     }
     val sh = df.select(col(idCol).as("id"),
         shingleHashesUdf(n)(col(textCol)).as("shs"))
@@ -1072,88 +793,33 @@ object Dedup {
     // per-doc capped shingle set (input hashes are sorted-distinct per
     // doc, so sort_array reconstructs canonical set identity) + size.
     // perDoc feeds THREE branches (class grouping, the rep join, the
-    // rep-array explode for per-shingle member lists) — persist so the
-    // shingle UDF + capped aggregation run once, not once per branch;
-    // released on the next invocation (ReleaseSlot discipline —
-    // releasePrevious() already ran at the top of this call, before
-    // any of this invocation's persists)
+    // rep-array explode for per-shingle member lists) — persisted so
+    // the shingle UDF + capped aggregation run once
     val perDoc = kept.groupBy("id")
       .agg(sort_array(collect_list(col("h"))).as("key"),
         count(lit(1)).cast("int").as("sz"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    spanningSlot.set(df.sparkSession, () => { perDoc.unpersist()
-      suspects.unpersist(); idDg.unpersist(); () })
-    val (star, reps) =
-      if (nSuspects <= SpanningMaxLocalSuspects) {
-        // suspect/cold split, cheapest routing that fits the set size:
-        //  - every doc a suspect (mass-duplication stress shape):
-        //    the joins would route nothing — skip them outright;
-        //  - small set: a literal IN-set filter (driver-collected;
-        //    kept WELL below the size where a locked-in 100k-literal
-        //    plan made analysis + task serialization dwarf the routed
-        //    work — multi-MiB task binaries at the 30x tier);
-        //  - otherwise: broadcast semi/anti joins against the
-        //    persisted frame (bounded by the cap, ≤ tens of MB).
-        // Exact class machinery then runs over suspects only.
-        val allDup = nSuspects == nDocs
-        val small =
-          if (!allDup && nSuspects <= SpanningInSetSuspects) {
-            // null-safety: drop null suspect ids and coalesce the IN
-            // to false, so the cold side (!in) NEVER drops rows — the
-            // same rows-kept semantics as the broadcast left_anti tier
-            // (null keys match nothing and stay cold)
-            val ids = suspects.collect().map(_.get(0))
-              .filter(_ != null).toSeq
-            suspects.unpersist(); idDg.unpersist()
-            Some(if (ids.isEmpty) lit(false)
-              else coalesce(col("id").isInCollection(ids), lit(false)))
-          } else None
-        val (hot, cold) =
-          if (allDup) {
-            suspects.unpersist(); idDg.unpersist()
-            (perDoc, perDoc.where(lit(false)))
-          } else small match {
-            case Some(in) => (perDoc.where(in), perDoc.where(!in))
-            case None =>
-              // materialize the cache BEFORE the main query: the semi
-              // and anti broadcast builds plan concurrently, and two
-              // racing evaluations would each re-run the census join
-              // (measured ~+10% on the mutated tier). One tiny job.
-              suspects.count()
-              (perDoc.join(broadcast(suspects), Seq("id"), "left_semi"),
-               perDoc.join(broadcast(suspects), Seq("id"), "left_anti"))
-          }
-        val (st, rp) = classStarReps(hot)
-        (st, rp.union(cold.select(col("id"), col("key"), col("sz"))))
-      } else {
-        suspects.unpersist(); idDg.unpersist() // routing unused here
-        // duplication-heavy corpus (suspects exceed the broadcast
-        // bound): rep per class over ALL docs (see classStarReps).
-        classStarReps(perDoc)
-      }
-    // thresholded pairs among representatives, full-corpus capped
-    // universe — the jaccardPairsCapped tail, except the per-shingle
-    // member lists come from EXPLODING the reps' own cached class-key
-    // arrays (perDoc.key IS the rep's capped shingle set), not from
-    // re-joining the exploded `kept` frame against the rep ids — one
-    // fewer shuffle join on the hot path
-    val byShingle = reps
-      .select(col("id"), col("sz"), explode(col("key")).as("h"))
-      .groupBy("h")
-      .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
-        .as("ms"))
-      .where(size(col("ms")) > 1)
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
+    spanningSlot.set(sess, () => { perDoc.unpersist(); idDg.unpersist(); () })
+    val route = routeSuspects(perDoc, "id", dupIds, nSuspects, nDocs)
+    // routing was the census's last reader (the broadcast tier's ids
+    // are materialized)
+    idDg.unpersist()
+    val pinned = perDoc :: route.pinned
+    spanningSlot.set(sess, () => { pinned.foreach(_.unpersist()); () })
+    val (star, classReps) = classStarReps(route.hot)
+    val reps = classReps
+      .union(route.cold.select(col("id"), col("key"), col("sz")))
+    // thresholded pairs among representatives over the full-corpus
+    // capped universe; the member lists come from EXPLODING the reps'
+    // own class-key arrays (perDoc.key IS the rep's capped shingle
+    // set), not from re-joining the exploded `kept` frame against the
+    // rep ids — one fewer shuffle join on the hot path
+    val parts = sess.sessionState.conf.numShufflePartitions
     val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-    val pairs = byShingle.repartition(parts)
-      .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
-      .select(col("p.*"))
-    val repPairs = pairs.groupBy("id_a", "id_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double") + 1e-9, 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b")
+    val repPairs = cooccurrenceJaccard(
+      memberLists(reps.select(col("id"), col("sz"),
+        explode(col("key")).as("h"))).repartition(parts),
+      idType, threshold).select("id_a", "id_b")
     val edges = star.union(repPairs)
     // Lineage barrier (lazy — .rdd defers computation): Spark 4.1's
     // Union constraint rewrite (UnionBase.rewriteConstraints) throws
@@ -1163,7 +829,7 @@ object Dedup {
     // by construction) and every consumer (connected components, the
     // leakage split) persists or checkpoints it immediately, so the
     // one-pass Row conversion is noise next to pair generation.
-    df.sparkSession.createDataFrame(edges.rdd, edges.schema)
+    sess.createDataFrame(edges.rdd, edges.schema)
   }
 
   /** Exact-class star edges + representative frame over a prepared
@@ -1171,20 +837,12 @@ object Dedup {
     * over the key partition); star edges rep→member for every non-rep
     * member; reps keep (id, key, sz).
     *
-    * ONE exchange of the array key, adopted in the round-16 A/B over
-    * the r11 two-hash-exchange form (groupBy(key){min} + equi-join
-    * back): at the 100× mass-dup tier the window form reads
-    * q83 13.2→8.1 s, q86 9.5→7.6, q119 10.9→8.1, q125 13.4→10.5 warm
-    * (25-35% off the quartet), and at sf0.1 it is a wash — the r11
-    * measurement that picked the join form predates the suspect-tier
-    * routing, under which toy-scale corpora never ship a large frame
-    * through here at all. The collect_list single-exchange alternative
-    * timed the same but buffers O(clique) ids in one aggregation row
-    * (the 2 GB-row boundary the engine avoids elsewhere); WindowExec's
-    * per-group buffer spills (ExternalAppendOnlyUnsafeRowBuffer), so
-    * a mega-clique degrades to disk instead of dying. A serialized
-    * perDoc cache was also measured: better than legacy, dominated by
-    * this plan fix — declined with data (COVERAGE.md round-16 log). */
+    * ONE exchange of the array key. WindowExec's per-group buffer
+    * spills (ExternalAppendOnlyUnsafeRowBuffer), so a mega-clique
+    * degrades to disk instead of dying; a collect_list form would
+    * buffer O(clique) ids in one aggregation row (the 2 GB-row
+    * boundary), and a groupBy(key){min} + join-back form ships the
+    * array key twice. */
   private def classStarReps(hot: DataFrame): (DataFrame, DataFrame) = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("key")
     val withRep = hot.withColumn("rep", min(col("id")).over(w))
@@ -1273,88 +931,76 @@ object Dedup {
     * map-side, the only shuffles are the band bucket-join and pair
     * distinct.
     *
-    * DUPLICATION-ADAPTIVE since round 14 (the q68/q115 census pattern,
-    * closing the last quadratic-per-clique plan shape the round-13
-    * verdict flagged): a clique of d byte-identical docs shares one
-    * signature, lands whole in EVERY band bucket, and the bucket
-    * self-join emits d²/2 candidates per band before the verify — the
-    * same curve that made the exact emitters watchdog-kills one
-    * duplication decade earlier. Docs with identical SIGNATURES
-    * (strictly more than byte-identical docs) contract to one rep
-    * before banding; bit-identity is immediate because the operator's
-    * entire output is a function of the signature: for any third doc X
-    * the band buckets of two identical-signature docs are equal (same
-    * slice, same hash seed), so A–X is a candidate iff B–X is, with
-    * the same matching-fraction estimate, and an intra-class pair is a
-    * candidate in every band scoring round(k/k + 1e-9, 4) = 1.0 — the
-    * lit the re-expansion emits. The linear signing pass stays; only
-    * the candidate half contracts. */
+    * Duplication-adaptive ([[adaptiveSelfPairs]]): a clique of d
+    * byte-identical docs shares one signature, lands whole in EVERY
+    * band bucket, and the bucket self-join would emit d²/2 candidates
+    * per band. Docs with identical SIGNATURES (strictly more than
+    * byte-identical docs) contract to one rep before banding;
+    * bit-identity is immediate because the operator's entire output is
+    * a function of the signature: for any third doc X the band buckets
+    * of two identical-signature docs are equal (same slice, same hash
+    * seed), so A–X is a candidate iff B–X is, with the same
+    * matching-fraction estimate, and an intra-class pair is a candidate
+    * in every band scoring round(k/k + 1e-9, 4) = 1.0 — the lit the
+    * re-expansion emits. The linear signing pass stays; only the
+    * candidate half contracts. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // drop shingle-less docs (empty signature) — see minhashUdf scaladoc
     val sig = minhashSignatures(df, idCol, textCol, shingleN, numHashes)
       .where(size(col("sig")) === numHashes)
-    // ONE raw-text scan (round-15 A/B, verdict item 6): the signature
-    // frame persists BEFORE routing and the census rides it as
-    // xxhash64(sig) instead of a second xxhash64(text) pass over raw
-    // bytes. Routing is at least as sharp — the contraction key IS the
+    // ONE text scan: the signature frame persists BEFORE routing and the
+    // census rides it as xxhash64(sig). The contraction key IS the
     // signature, so sig-equal classes are exactly what contraction can
-    // lift, and bit-identity holds for the strictly larger class set
-    // (equal signatures => equal band buckets and a k/k = 1.0
-    // estimate, the scaladoc's function-of-the-signature argument).
-    // The ids gate now checks uniqueness over exactly the slim rows
-    // the re-expansion lifts (ids dropped with empty signatures never
-    // band, so they cannot forge a self-pair).
-    lastFastLshSigRelease.swap(sig.sparkSession,
-      () => { sig.unpersist(); () })
+    // lift, and the ids gate checks uniqueness over exactly the rows
+    // the re-expansion lifts.
+    lshSigsSlot.swap(sig.sparkSession, () => { sig.unpersist(); () })
     sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = numHashes / bands
     adaptiveSelfPairs(
       sig.select(col("id"), xxhash64(col("sig")).as("dg")),
       sig, "id", Seq("sig"),
-      s => minhashLshPairsOverSigs(s, numHashes, bands),
+      s => bandedSelfPairs(s, "sig",
+        (0 until bands).map(b =>
+          hash(slice(col("sig"), b * rows + 1, rows), lit(b))),
+        (a, b) => matchingFraction(a, b, numHashes).as("est_jaccard"),
+        lit(true)),
       lit(1.0), "est_jaccard", lshPairsSlot)
   }
 
-  /** The band bucket-join + matching-fraction verify over a prepared
-    * (id, sig) frame — minhashLshPairs' core, factored for the
-    * duplication-adaptive wrapper. Since round 18 the verify is INLINE
-    * (signatures ride the band rows into the bucket join), so the
-    * frame is read exactly once and the round-14 internal persist —
-    * which existed because the old shape read it four times (self-join
-    * sides + two post-distinct verify joins) — is gone with the joins
-    * it served. */
-  private def minhashLshPairsOverSigs(sigIn: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
-    val sig = sigIn
-    val rowsPerBand = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        hash(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand), lit(b))
-          .as("bucket"))
+  /** The 4-dp fraction of positions where two equal-length signatures
+    * agree — a codegen'd positional-equality scan. */
+  private def matchingFraction(a: Column, b: Column, k: Int): Column =
+    round(graft.expr.VectorOps.countEqualLongs(a, b).cast("double") / k
+      + 1e-9, 4)
+
+  /** The banded bucket self-join every LSH emitter shares: each
+    * (id, `sigCol`) row explodes into one (band, bucket) row per band
+    * key (`bandKeys(b)` computes band b's bucket from the row), rows
+    * sharing a (band, bucket) pair up with id_a < id_b, `score` is
+    * computed from the two signatures inside the join stage, `keep`
+    * filters on it, and `distinct` collapses a pair found in several
+    * bands. Filtering before the distinct ships only kept pairs through
+    * its exchange (`lit(true)` keeps all; Catalyst drops the filter).
+    * The score must be a function of the pair — one signature per id,
+    * the adaptive wrapper's ids gate — so distinct over the scored
+    * triple is distinct over the pair. */
+  private def bandedSelfPairs(frame: DataFrame, sigCol: String,
+      bandKeys: Seq[Column], score: (Column, Column) => Column,
+      keep: Column): DataFrame = {
+    val bandCols = bandKeys.zipWithIndex.map { case (key, b) =>
+      struct(lit(b).as("band"), key.as("bucket"))
     }
-    // INLINE verify (round 18, guide §2.3/§2.4): the signatures ride
-    // the band rows into the bucket self-join, so the matching-minhash
-    // fraction is computed IN the join stage — the two post-distinct
-    // verify joins (and the internal persist of the signature frame
-    // they re-read, plus their sorts of the candidate stream at scale)
-    // are gone; the signature frame is now read exactly once. The
-    // match count is a codegen'd positional-equality scan (the
-    // zip_with/filter HOF evaluated interpreted per element).
-    // est_jaccard is a function of the pair (one signature per id —
-    // the adaptive wrapper's ids gate), so distinct over
-    // (id_a, id_b, est_jaccard) equals the old distinct over the pair,
-    // and a pair found in several bands still collapses to one row.
-    val banded = sig.select(col("id"), col("sig"),
+    val banded = frame.select(col("id"), col(sigCol),
         explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("sig"), col("bb.band"), col("bb.bucket"))
+      .select(col("id"), col(sigCol), col("bb.band"), col("bb.bucket"))
     banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
       .where(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(graft.expr.VectorOps
-          .countEqualLongs(col("a.sig"), col("b.sig"))
-          .cast("double") / numHashes + 1e-9, 4).as("est_jaccard"))
+        score(col(s"a.$sigCol"), col(s"b.$sigCol")))
+      .where(keep)
       .distinct()
   }
 
@@ -1442,91 +1088,42 @@ object Dedup {
     * matching-fraction verify computed inline — the q22 shape with
     * every primitive replayable in SQL.
     *
-    * DUPLICATION-ADAPTIVE since round 14, closing the round-13
-    * verdict's last quadratic-per-clique shape (this was the suite's
-    * slowest 100× query — identical signatures share every band key,
-    * so a d-member byte-identical clique emits d²/2 candidates per
-    * band). Contraction key is the per-doc signature ARRAY (the j-
-    * ordered minhash vector the relational form explodes from): the
-    * operator's whole output is a function of it — equal arrays give
-    * equal band keys (the bkey string is the band's minhashes joined
-    * in j order) and the matching-fraction estimate of an intra-class
-    * pair is round(k/k + 1e-9, 4) = 1.0, the lit the re-expansion
-    * emits. The linear signing pass stays; only the candidate half
-    * contracts. */
+    * Duplication-adaptive like [[minhashLshPairs]]: identical
+    * signatures share every band key, so a d-member byte-identical
+    * clique would emit d²/2 candidates per band. The contraction key
+    * is the per-doc signature ARRAY: equal arrays give equal band keys,
+    * and the matching-fraction estimate of an intra-class pair is
+    * round(k/k + 1e-9, 4) = 1.0, the lit the re-expansion emits. */
   def minhashLshPairsPortable(df: DataFrame, idCol: String,
       textCol: String, n: Int = 3, bands: Int = 4): DataFrame = {
     val k = PortableMinhashCoeffs.length
     require(bands >= 1 && k % bands == 0,
       s"bands must divide $k, got $bands")
-    // empty array = no shingles; such docs never band (posexplode of
-    // an empty array emits nothing), matching the original plan
+    // empty array = no shingles; such docs never band, matching the
+    // relational (id, j, minhash) form
     val slim = df.select(col(idCol).as("id"),
         portableMinhashUdf(n)(col(textCol)).as("sigarr"))
       .where(size(col("sigarr")) > 0)
-    // one raw-text scan: census rides the persisted signature frame as
-    // xxhash64(sigarr) — see minhashLshPairs (the same round-15 A/B;
-    // here the signing pass is the md5 portable signer, the most
-    // expensive scan in the query, so sharing it matters more)
-    lastPortableLshSigRelease.swap(slim.sparkSession,
+    // one text scan: the census rides the persisted signature frame, as
+    // in minhashLshPairs (here the md5 signer is the most expensive
+    // scan in the query)
+    portableLshSigsSlot.swap(slim.sparkSession,
       () => { slim.unpersist(); () })
     slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = k / bands
     adaptiveSelfPairs(
       slim.select(col("id"), xxhash64(col("sigarr")).as("dg")),
       slim, "id", Seq("sigarr"),
-      s => portableLshPairsOverSigArrays(s, bands),
+      // the signature array is j-ordered (posexplode indices), so each
+      // band key is a straight slice of it
+      s => bandedSelfPairs(s, "sigarr",
+        (0 until bands).map(b =>
+          array_join(transform(slice(col("sigarr"), b * rows + 1, rows),
+            m => m.cast("string")), ",")),
+        (a, b) => matchingFraction(a, b, k).as("est_jaccard"),
+        lit(true)),
       lit(1.0), "est_jaccard", portableLshPairsSlot)
   }
-
-  /** The portable banding + candidate + matching-fraction verify over
-    * a prepared (id, sigarr) frame — minhashLshPairsPortable's
-    * original plan, factored for the duplication-adaptive wrapper
-    * (the relational (id, j, minhash) form is re-derived here by
-    * exploding the array). */
-  private def portableLshPairsOverSigArrays(slim: DataFrame,
-      bands: Int): DataFrame = {
-    val k = PortableMinhashCoeffs.length
-    val rows = k / bands
-    // ROW-LOCAL band keys (round 18): the signature array is already
-    // j-ordered (posexplode indices), so each band key — the band's
-    // minhashes joined in j order — is a straight slice of the array.
-    // The relational explode + groupBy form paid a corpus-sized
-    // exchange, a per-group array_sort, and a persisted (id, j,
-    // minhash) frame just to reassemble exactly these slices. Band-key
-    // STRINGS are byte-identical to the old form's, so candidates (and
-    // the oracle's replay) are unchanged.
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        array_join(transform(slice(col("sigarr"), b * rows + 1, rows),
-          m => m.cast("string")), ",").as("bkey"))
-    }
-    // INLINE verify, same move as minhashLshPairsOverSigs: signatures
-    // ride the band rows, the matching count is a codegen'd
-    // positional-equality scan (equal to the relational
-    // count(when(ma === mb, 1)) because both arrays are j-ordered),
-    // and the two 16x-fanout verify joins + their groupBy are gone.
-    // est_jaccard is a function of the pair, so distinct over the
-    // triple equals the old distinct over the pair.
-    val banded = slim.select(col("id"), col("sigarr"),
-        explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("sigarr"), col("bb.band"), col("bb.bkey"))
-    banded.as("a")
-      .join(banded.as("b"), Seq("band", "bkey"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        round(graft.expr.VectorOps
-          .countEqualLongs(col("a.sigarr"), col("b.sigarr"))
-          .cast("double") / k + 1e-9, 4).as("est_jaccard"))
-      .distinct()
-  }
-
-  // pre-routing signature caches (the census rides these; released
-  // when the next invocation of the owning emitter swaps them out).
-  // The former lastPortableLshRelease/lastFastLshRelease slots died
-  // with the internal signature persists the round-18 inline-verify
-  // rewrite removed (ADVICE r18).
-  private val lastPortableLshSigRelease = ReleaseSlot()
-  private val lastFastLshSigRelease = ReleaseSlot()
 
   /** INCREMENTAL near-dup — [[minhashLshPairsPortable]]'s production
     * shape at 100 TB, the MinHash analogue of [[dedupIncremental]]: a
@@ -1893,22 +1490,20 @@ object Dedup {
     * maxHamming 4..7 uses 8x8-bit. Radii above 7 would need 4-bit-or-
     * narrower bands whose bucket collision rate makes blocking
     * degenerate toward all-pairs — rejected rather than silently
-    * under-recalling. */
+    * under-recalling.
+    *
+    * Duplication-adaptive ([[adaptiveSelfPairs]]): a clique of d
+    * byte-identical docs lands whole in EVERY band bucket. Docs with
+    * identical SIGNATURES contract to one rep; hamming(x, y) =
+    * hamming(rep_x, rep_y) because members share their rep's
+    * signature, and intra-class pairs verify at hamming 0 <= maxHamming
+    * in the uncontracted plan. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int): DataFrame = {
     require(maxHamming >= 0 && maxHamming <= 7,
       s"simhash banding guarantees recall only to hamming 0..7 (8x8-bit " +
         s"bands; negative radii would also break the contraction's " +
         s"intra-class hamming=0 emission); got maxHamming=$maxHamming")
-    // DUPLICATION-ADAPTIVE since round 13 (the q68/q115 census
-    // pattern): under mass duplication a clique of d byte-identical
-    // docs lands whole in EVERY band bucket, so candidate emission
-    // goes d^2/2 per band — the former 100x-tier timeout. Docs with
-    // identical SIGNATURES (strictly more than byte-identical docs)
-    // contract to one rep; hamming(x, y) = hamming(rep_x, rep_y)
-    // because members share their rep's signature exactly, and
-    // intra-class pairs verify at hamming 0 <= maxHamming in the
-    // uncontracted plan (same sig -> every band agrees -> candidate).
     val sh = simhash(df, idCol, textCol)
     adaptiveSelfPairs(
       df.select(col(idCol).as("id"), xxhash64(col(textCol)).as("dg")),
@@ -1918,39 +1513,20 @@ object Dedup {
   }
 
   /** The band-blocked candidate + popcount-verify pipeline over a
-    * prepared (id, simhash) frame — simhashPairs' original plan,
-    * factored for the duplication-adaptive wrapper ([[graft]]-visible
-    * so ScaleProof's q23 stage probe times THIS implementation, not a
-    * reconstruction that could drift). */
+    * prepared (id, simhash) frame ([[graft]]-visible so ScaleProof's
+    * q23 stage probe times THIS implementation). The verify runs
+    * before the distinct, so its exchange ships only pairs within
+    * `maxHamming`. */
   private[graft] def simhashPairsOverSigs(sh: DataFrame,
       maxHamming: Int): DataFrame = {
     val nBands = if (maxHamming <= 3) 4 else 8
     val width = 64 / nBands
     val mask = (1L << width) - 1
-    val bandCols = (0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(col("simhash"), b * width).bitwiseAND(mask).as("bucket"))
-    }
-    val banded = sh.select(col("id"), col("simhash"),
-        explode(array(bandCols: _*)).as("bb"))
-      .select(col("id"), col("simhash"), col("bb.band"), col("bb.bucket"))
-    // verify BEFORE the distinct (round 18, guide §2.3 "shuffle fewer
-    // bytes"): the popcount is row-local and both signatures are
-    // already in the join output, so filtering to hamming <= max
-    // before the dedup exchange ships only VERIFIED pairs (54k at the
-    // 100x tier) instead of every raw candidate (5.4M there — a 100x
-    // cut in distinct-exchange volume). hamming is a pure function of
-    // the pair (one signature per id), so distinct over
-    // (id_a, id_b, hamming) equals distinct over the pair — same rows,
-    // same schema, and a pair found in several bands still collapses.
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .as("hamming"))
-      .where(col("hamming") <= maxHamming)
-      .distinct()
+    bandedSelfPairs(sh, "simhash",
+      (0 until nBands).map(b =>
+        shiftright(col("simhash"), b * width).bitwiseAND(mask)),
+      (a, b) => bit_count(a.bitwiseXOR(b)).as("hamming"),
+      col("hamming") <= maxHamming)
   }
 
   /** Embedding-cosine near-dup pairs above `threshold`, LSH-bucketed by
@@ -2188,9 +1764,6 @@ object Dedup {
         edges.count() <= 2L * localEdgeCap)
       .map(lt => localComponentLabels(ids.sparkSession, idType, lt,
         edges.where(col("src") < col("dst")).collect()))
-    if (sys.env.contains("SPARK_GRAFT_SPAN_DEBUG"))
-      println(s"[cc-debug] mode=" +
-        (if (labelsOpt.isDefined) "local-uf" else "dist-loop"))
     // finally: distributedMinLabel throws on non-convergence, and the
     // corpus-scale edge cache must not outlive this call on that path
     val endpointLabels =

@@ -112,21 +112,6 @@ object IvfIndex {
       .parquet(s"$dir/vectors")
   }
 
-  /** [[append]] into a committed version (the current one by default).
-    * Returns the version appended to. */
-  def appendVersioned(newVectors: DataFrame, dir: String,
-      asOf: Option[Long] = None, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Long = {
-    val v = asOf.orElse(currentVersion(dir)).getOrElse(
-      throw new IllegalStateException(
-        s"no committed index version under $dir"))
-    val (fs, _) = hfs(dir)
-    require(fs.exists(markerPath(dir, v)),
-      s"index version $v under $dir is not committed")
-    append(newVectors, s"$dir/v_$v", idCol, vecCol)
-    v
-  }
-
   // ---- versioned rebuilds (atomic publish; TxnLog-style claims).
   // All version bookkeeping goes through the Hadoop FileSystem API so
   // the index works wherever the parquet does (HDFS/S3A/local) —

@@ -50,7 +50,7 @@ object SequencePack {
     // persisted: two plan branches read it (the bucket-sum aggregation
     // and the join's left side) — without the persist the upstream
     // token-count expression (a full-text regex scan in q85) runs over
-    // the corpus twice (jaccardPairsPrefixScoped precedent)
+    // the corpus twice
     val base = docs.select(col(idCol).cast("long").as("id"),
         col(tokensCol).cast("long").as("toks"))
       .withColumn("__bucket", expr(s"id DIV $groupWidth"))

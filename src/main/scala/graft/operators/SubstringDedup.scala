@@ -162,9 +162,4 @@ object SubstringDedup {
         }
       }
   }
-
-  /** Visible-for-spec window stream. */
-  private[graft] def positionalWindows(df: DataFrame, idCol: String,
-      textCol: String, n: Int): DataFrame =
-    windowed(df, idCol, textCol, n)
 }

@@ -181,9 +181,6 @@ object UrlChecker {
   def compactDateToEpoch(date: Column): Column =
     unix_timestamp(to_timestamp(date, "yyyyMMdd"))
 
-  def isoInstantToEpoch(ts: Column): Column =
-    unix_timestamp(to_timestamp(ts, "yyyy-MM-dd'T'HH:mm:ss'Z'"))
-
   /** Duration strings like "2 hours 30 minutes" / "1h 5m" / "45 minutes"
     * -> seconds (reference F27: unccelearn.py:65-87). */
   def durationToSeconds(dur: Column): Column = {

@@ -87,10 +87,6 @@ object Xml {
     regexp_extract_all(xml,
       lit("(?s)<record(?:\\s[^>]*)?>(.*?)</record>"), lit(1))
 
-  /** Dublin-Core field from an OAI record (dc:title, dc:identifier...). */
-  def dcField(recordXml: Column, field: String): Column =
-    tagContents(recordXml, s"dc:$field")
-
   /** Contents of `<tag ...>` elements that carry
     * `filterAttr="filterValue"` (the reference xml_extractor's
     * attribute-filter mode over CONTENT, used for

@@ -114,19 +114,47 @@ class AdaptivePairsSpec extends SparkSuite {
     val s = initSpark()
     import s.implicits._
     val n = Dedup.IntraExplodeCap + 6 // forces the bigIntra branch
-    val docs = ((0 until n).map(i => (i.toLong, base)) :+
-        (900000L, variant))
+    val small = Seq(2000L, 2001L, 2002L) // an explode-path class beside it
+    val docs = ((0 until n).map(i => (i.toLong, base)) ++
+        small.map(i => (i, cold)) :+ (900000L, variant))
       .toDF("doc_id", "text").repartition(7)
-    val out = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6)
-      .persist()
-    try {
-      val intra = out.where(col("jaccard") === 1.0).count()
-      assert(intra === n.toLong * (n - 1) / 2,
-        s"mega-class intra pair count wrong: $intra")
-      val cross = out.where(col("jaccard") < 1.0).count()
-      assert(cross === n.toLong, // every clique member pairs the variant
-        s"cross lift must cover every member: $cross")
-    } finally { out.unpersist(); () }
+    // expected intra pairs: every i<j pair inside each class
+    var en = 0L; var esa = 0L; var esb = 0L
+    def clique(ids: Seq[Long]): Unit =
+      for (i <- ids.indices; j <- (i + 1) until ids.size) {
+        en += 1; esa += ids(i); esb += ids(j)
+      }
+    clique(0L until n.toLong)
+    clique(small)
+    // both exact emitters re-expand through adaptiveSelfPairs
+    Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "jaccardPairs" ->
+        (() => Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6)),
+      "jaccardPairsPrefix" ->
+        (() => Dedup.jaccardPairsPrefix(docs, "doc_id", "text", 3, 0.6))
+    ).foreach { case (name, emit) =>
+      val agg = emit().agg(
+        count(when(col("jaccard") === 1.0, 1)).as("intra"),
+        count(when(col("jaccard") < 1.0, 1)).as("cross"),
+        count(lit(1)).as("n"),
+        countDistinct(struct(col("id_a"), col("id_b"))).as("nd"),
+        sum(when(col("jaccard") === 1.0, col("id_a"))).as("sa"),
+        sum(when(col("jaccard") === 1.0, col("id_b"))).as("sb"),
+        sum(when(col("id_a") >= col("id_b"), 1).otherwise(0)).as("bad"))
+        .collect().head
+      assert(agg.getAs[Long]("intra") === en,
+        s"$name: mega-class intra pair count wrong")
+      // every clique member pairs the variant; the small class pairs
+      // nothing across
+      assert(agg.getAs[Long]("cross") === n.toLong,
+        s"$name: cross lift must cover every member")
+      assert(agg.getAs[Long]("nd") === agg.getAs[Long]("n"),
+        s"$name: duplicate pair emitted")
+      assert(agg.getAs[Long]("sa") === esa && agg.getAs[Long]("sb") === esb,
+        s"$name: intra pairs are not the classes' i<j pairs")
+      assert(agg.getAs[Long]("bad") === 0L,
+        s"$name: canonical id_a < id_b broken")
+    }
   }
 
   test("jaccardPairs rejects thresholds outside (0, 1] (contraction " +

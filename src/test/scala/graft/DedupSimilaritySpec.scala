@@ -455,30 +455,26 @@ class DedupSimilaritySpec extends SparkSuite {
     }
   }
 
-  test("jaccardPairsPrefixScoped releases its shingle-set cache via the " +
-      "returned hook, and the module slot keeps discarded-thunk " +
-      "invocations from accumulating pinned RDDs") {
+  test("jaccardPairsPrefix's release slots free each previous " +
+      "invocation's caches, so repeated calls keep the pinned RDD " +
+      "count flat") {
     val s = initSpark()
     val real = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (pairs, release) =
-      Dedup.jaccardPairsPrefixScoped(real, "doc_id", "text", 3, 0.6)
-    pairs.count() // materialize: the persist is live now
-    val during = s.sparkContext.getPersistentRDDs.size
-    assert(during > 0,
+    def pinned = s.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = pinned
+    Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6).count()
+    val afterFirst = pinned
+    val firstOwn = afterFirst -- before
+    assert(firstOwn.nonEmpty,
       "expected the operator's internal persist to be registered")
-    release()
-    assert(s.sparkContext.getPersistentRDDs.size < during,
-      "release hook must unpersist the internal shingle-set cache")
-    // bare-jaccardPairsPrefix callers DISCARD the thunk: the module
-    // ReleaseSlot must free each previous invocation's caches, so
-    // repeated calls hold the pinned count flat instead of growing it
-    // (UDF closures differ per call, so CacheManager never dedupes
-    // these persists on its own)
+    // UDF closures differ per call, so CacheManager never dedupes these
+    // persists on its own: only the slots keep the count flat
     Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6).count()
-    val afterFirst = s.sparkContext.getPersistentRDDs.size
-    Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6).count()
-    assert(s.sparkContext.getPersistentRDDs.size === afterFirst,
+    val afterSecond = pinned
+    assert(afterSecond.size === afterFirst.size,
       "slot must release the previous invocation's caches")
+    assert((firstOwn intersect afterSecond).isEmpty,
+      "the first invocation's caches must be unpersisted")
   }
 
   test("jaccardPairsPrefix is duplication-adaptive: contraction + " +
@@ -1386,46 +1382,5 @@ class DedupSimilaritySpec extends SparkSuite {
       .approxCountDistinct(df, "event_type", col("user_id"), "est")
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got === again, "portable HLL must be bit-deterministic")
-  }
-
-  test("intra-class re-expansion past IntraExplodeCap streams through " +
-      "the rep-keyed self-join — same pair set as the explode path, " +
-      "no single-row allocation cliff") {
-    val s = initSpark()
-    import s.implicits._
-    val big = Dedup.IntraExplodeCap + 40 // one class past the cap
-    val bigText = "alpha beta gamma delta epsilon zeta eta theta"
-    val smallText = "one two three four five six seven eight nine"
-    val corpus =
-      (0L until big.toLong).map(i => (i, bigText)) ++
-        Seq(2000L, 2001L, 2002L).map(i => (i, smallText)) ++
-        Seq((3000L, "lone wolf text with no duplicate partner at all"))
-    val df = corpus.toDF("doc_id", "text")
-    val (pairs, release) =
-      Dedup.jaccardPairsPrefixScoped(df, "doc_id", "text", 3, 0.6)
-    val agg = pairs.agg(
-      count(lit(1)).as("n"),
-      countDistinct(struct(col("id_a"), col("id_b"))).as("nd"),
-      sum(col("id_a")).as("sa"), sum(col("id_b")).as("sb"),
-      min(col("jaccard")).as("jmin"), max(col("jaccard")).as("jmax"),
-      sum(when(col("id_a") >= col("id_b"), 1).otherwise(0)).as("bad"))
-      .collect().head
-    release()
-    // expected: all i<j pairs inside each class, nothing across
-    var en = 0L; var esa = 0L; var esb = 0L
-    def clique(ids: Seq[Long]): Unit =
-      for (i <- ids.indices; j <- (i + 1) until ids.size) {
-        en += 1; esa += math.min(ids(i), ids(j))
-        esb += math.max(ids(i), ids(j))
-      }
-    clique(0L until big.toLong)
-    clique(Seq(2000L, 2001L, 2002L))
-    assert(agg.getAs[Long]("n") === en)
-    assert(agg.getAs[Long]("nd") === en, "duplicate pair emitted")
-    assert(agg.getAs[Long]("sa") === esa)
-    assert(agg.getAs[Long]("sb") === esb)
-    assert(agg.getAs[Double]("jmin") === 1.0)
-    assert(agg.getAs[Double]("jmax") === 1.0)
-    assert(agg.getAs[Long]("bad") === 0L, "canonical id_a < id_b broken")
   }
 }

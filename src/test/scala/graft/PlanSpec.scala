@@ -82,6 +82,33 @@ class PlanSpec extends SparkSuite {
     assert(n === 3, s"expected 3 exchanges, got $n:\n$plan")
   }
 
+  test("jaccardPairs re-spreads the member lists only when the source " +
+      "scan has fewer splits than the session's shuffle partitions") {
+    val s = initSpark()
+    val path = s"$dir/documents.parquet"
+    val parts = s.sessionState.conf.numShufflePartitions
+    def respreads(): Boolean = planOf(graft.operators.Dedup.jaccardPairs(
+        s.read.parquet(path), "doc_id", "text", 3, 0.2))
+      .contains("RoundRobinPartitioning")
+    // one file, one split: AQE would coalesce the member-list aggregate
+    // into few tasks, so the explosion is re-spread
+    assert(graft.operators.Dedup.scanParallelism(s.read.parquet(path)) === 1)
+    assert(respreads(), "a one-split input must get the re-spread")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = s.conf.getOption(key)
+    val fileLen = new java.io.File(path).length
+    s.conf.set(key, math.max(1L, fileLen / (2L * parts)).toString)
+    try {
+      assert(graft.operators.Dedup.scanParallelism(s.read.parquet(path))
+        >= parts)
+      assert(!respreads(),
+        "an input with >= numShufflePartitions splits needs no re-spread")
+    } finally prev match {
+      case Some(v) => s.conf.set(key, v)
+      case None    => s.conf.unset(key)
+    }
+  }
+
   test("dsirScore: count-table joins broadcast (local relations by " +
       "construction), no cache lifecycle in the plan") {
     val s = initSpark()
