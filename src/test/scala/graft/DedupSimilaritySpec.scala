@@ -1383,4 +1383,45 @@ class DedupSimilaritySpec extends SparkSuite {
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(got === again, "portable HLL must be bit-deterministic")
   }
+
+  test("intra-class re-expansion past IntraExplodeCap streams through " +
+      "the rep-keyed self-join — same pair set as the explode path, " +
+      "no single-row allocation cliff") {
+    val s = initSpark()
+    import s.implicits._
+    val big = Dedup.IntraExplodeCap + 40 // one class past the cap
+    val bigText = "alpha beta gamma delta epsilon zeta eta theta"
+    val smallText = "one two three four five six seven eight nine"
+    val corpus =
+      (0L until big.toLong).map(i => (i, bigText)) ++
+        Seq(2000L, 2001L, 2002L).map(i => (i, smallText)) ++
+        Seq((3000L, "lone wolf text with no duplicate partner at all"))
+    val df = corpus.toDF("doc_id", "text")
+    // the module release slot frees this call's shingle-set cache on the
+    // next invocation
+    val pairs = Dedup.jaccardPairsPrefix(df, "doc_id", "text", 3, 0.6)
+    val agg = pairs.agg(
+      count(lit(1)).as("n"),
+      countDistinct(struct(col("id_a"), col("id_b"))).as("nd"),
+      sum(col("id_a")).as("sa"), sum(col("id_b")).as("sb"),
+      min(col("jaccard")).as("jmin"), max(col("jaccard")).as("jmax"),
+      sum(when(col("id_a") >= col("id_b"), 1).otherwise(0)).as("bad"))
+      .collect().head
+    // expected: all i<j pairs inside each class, nothing across
+    var en = 0L; var esa = 0L; var esb = 0L
+    def clique(ids: Seq[Long]): Unit =
+      for (i <- ids.indices; j <- (i + 1) until ids.size) {
+        en += 1; esa += math.min(ids(i), ids(j))
+        esb += math.max(ids(i), ids(j))
+      }
+    clique(0L until big.toLong)
+    clique(Seq(2000L, 2001L, 2002L))
+    assert(agg.getAs[Long]("n") === en)
+    assert(agg.getAs[Long]("nd") === en, "duplicate pair emitted")
+    assert(agg.getAs[Long]("sa") === esa)
+    assert(agg.getAs[Long]("sb") === esb)
+    assert(agg.getAs[Double]("jmin") === 1.0)
+    assert(agg.getAs[Double]("jmax") === 1.0)
+    assert(agg.getAs[Long]("bad") === 0L, "canonical id_a < id_b broken")
+  }
 }
